@@ -264,8 +264,8 @@ object AdvSweep {
     // ---- distributed nearDupClusters on a 50M-pair component ----------
     step("labelprop_50m") {
       // the 10k family as an explicit clique (50M pairs) + a 1000-node
-      // chain: driverMaxPairs=0 FORCES the distributed label-prop path
-      // that production hits when the pair set exceeds the driver gate.
+      // chain through the distributed label-prop path that production
+      // hits when the pair set exceeds the driver-twin cap.
       // The chain is the diameter stress pointer jumping exists for.
       val ids = spark.range(0, 10000).select((col("id") + 100000L).as("x"))
       val clique = ids.select(col("x").as("doc_a"))
@@ -273,8 +273,8 @@ object AdvSweep {
         .where(col("doc_a") < col("doc_b"))
       val chain = spark.range(0, 999)
         .select((col("id") + 500000L).as("doc_a"), (col("id") + 500001L).as("doc_b"))
-      val cl = Dedup.nearDupClusters(clique.unionByName(chain),
-        maxIter = 20, driverMaxPairs = 0).persist()
+      val cl = Dedup.nearDupClustersDistributed(clique.unionByName(chain),
+        maxIter = 20).persist()
       stats("lp_iters") = Dedup.lastLabelPropIterations.toString // ~log2(diameter)+2
       stats("lp_clusters") =
         cl.agg(countDistinct(col("cluster"))).collect()(0).getLong(0).toString // 2
@@ -524,8 +524,8 @@ object AdvSweep {
       val corpus = ids.select(col("x").as("doc_id"))
         .unionByName(spark.range(0, 1000).select((col("id") + 500000L).as("doc_id")))
         .unionByName(singles)
-      val clusters = Dedup.nearDupClusters(clique.unionByName(chain),
-        maxIter = 20, driverMaxPairs = 0) // FORCE the distributed path
+      val clusters = Dedup.nearDupClustersDistributed(clique.unionByName(chain),
+        maxIter = 20)
       val remap = corpus.join(clusters, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("canonical_id"))
         .persist()

@@ -1,136 +1,5 @@
 package graft.dedup
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types._
-
-/** All verified candidate pairs of ONE under-cap LSH bucket, in one
-  * eval: input is the bucket's collected `array<struct<doc_id:long,
-  * sig:array<long>>>`, output is `array<struct<doc_a, doc_b,
-  * est_jaccard>>` for every id-ordered pair whose signature agreement
-  * `|{i : a[i]==b[i]}| / k` reaches `minEst` — exactly the
-  * [[SigAgreement]] arithmetic (same integer count, same double
-  * divide), so a pair's est here is bit-identical to the join-attached
-  * verification it replaces.
-  *
-  * Why: the bucket self-join materialized every raw candidate as a
-  * join output row (5.2M at sf0.1 for 5k docs — near-cap buckets are
-  * quadratic by design), attached both k-long signatures by two more
-  * joins, and evaluated the agreement per row, only for the minEst
-  * filter to discard ~99.9%. Inside the bucket the same compares are
-  * a tight loop over in-memory arrays and only SURVIVORS become rows.
-  * Shuffle-byte arithmetic at scale: signatures now ride the one
-  * (band, bh) exchange (bands × 256 B per doc) instead of riding the
-  * two doc-keyed attach joins (2 × 256 B per doc) plus the candidate
-  * pairs riding two exchanges — comparable bytes, minus the quadratic
-  * row materialization. The skew cap still bounds the per-eval work at
-  * cap²/2 compares; over-cap buckets keep the star branch (never
-  * collected, never quadratic).
-  *
-  * Pair order: ids sorted ascending per bucket, pairs emitted with
-  * doc_a < doc_b — same invariant as the self-join's `doc_a < doc_b`.
-  * CodegenFallback: one eval per BUCKET row; the loops inside are the
-  * hot path and stay JIT-compiled Scala.
-  */
-case class BucketPairs(child: Expression, k: Int, minEst: Double)
-  extends UnaryExpression with CodegenFallback {
-
-  require(k > 0, s"k must be positive, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(a, b)), _)
-      if a.dataType == LongType && b.dataType.isInstanceOf[ArrayType] &&
-        b.dataType.asInstanceOf[ArrayType].elementType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bucket_pairs expects array<struct<long, array<long>>>, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false),
-    StructField("est_jaccard", DoubleType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bucket_pairs"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](n)
-    val sigs = new Array[Array[Long]](n)
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 2)
-      ids(i) = row.getLong(0)
-      sigs(i) = row.getArray(1).toLongArray()
-      i += 1
-    }
-    // sort by doc_id so pairs come out (smaller, larger) — the
-    // self-join's doc_a < doc_b invariant
-    val order = (0 until n).sortBy(ids)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var a = 0
-    while (a < n - 1) {
-      val ia = order(a)
-      val sa = sigs(ia)
-      var b = a + 1
-      while (b < n) {
-        val ib = order(b)
-        val sb = sigs(ib)
-        val lim = math.min(k, math.min(sa.length, sb.length))
-        var c = 0
-        var p = 0
-        while (p < lim) {
-          if (sa(p) == sb(p)) c += 1
-          p += 1
-        }
-        val est = c.toDouble / k
-        if (est >= minEst) {
-          out += InternalRow(ids(ia), ids(ib), est)
-        }
-        b += 1
-      }
-      a += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Streaming per-bucket pair verification over a (band, bh, doc_id)-
-  * sorted partition iterator — the one-exchange kernel (r17). Input
-  * rows are (band, bh, doc_id, sig) hash-partitioned by (band, bh) and
-  * sorted within the partition, so every bucket arrives consecutively
-  * with its MIN doc_id first. Per bucket:
-  *
-  *   - under-cap (≤ cap members): buffer the members (bounded by cap)
-  *     and emit every id-ordered pair whose signature agreement reaches
-  *     `minEst` — the [[BucketPairs]] loop, same integer count, same
-  *     double divide, pairs (doc_a < doc_b) because the buffer is
-  *     already id-sorted;
-  *   - over-cap: the moment member cap+1 arrives, flush the buffered
-  *     members as STAR pairs to the bucket-min anchor (the first row)
-  *     and stream every further member the same way — O(bucket) rows,
-  *     O(cap) memory, the skew guard's bound. Star pairs carry the
-  *     IDENTICAL inline agreement the attach-join + [[SigAgreement]]
-  *     path computed (r16 formulation), so est is bit-equal.
-  *
-  * Why: the two-pass formulation shuffled the banded frame TWICE on
-  * (band, bh) — once for the size census, once for the collect_list —
-  * and over-cap members rode two more doc-keyed attach joins. This
-  * pass reads the one sorted exchange and emits only survivors;
-  * memory is bounded by cap member signatures (~264 KB at cap 1000).
-  *
-  * Contract: members with a NULL signature are skipped (they carry
-  * nothing to verify — [[Dedup.bandedWideOf]] cannot produce them, the
-  * guard is for direct callers; ADVICE r16 #1). */
 /** Streaming PROBE verification over a (band, bh, side, doc_id)-sorted
   * partition iterator (r17) — the between-tables kernel shape: rows
   * are (band, bh, side, doc_id, sig) with side 0 = the INDEX/corpus,
@@ -334,6 +203,34 @@ private[dedup] final class BucketAllPairsStream(
   }
 }
 
+/** Streaming per-bucket pair verification over a (band, bh, doc_id)-
+  * sorted partition iterator — the one-exchange kernel (r17). Input
+  * rows are (band, bh, doc_id, sig) hash-partitioned by (band, bh) and
+  * sorted within the partition, so every bucket arrives consecutively
+  * with its MIN doc_id first. Per bucket:
+  *
+  *   - under-cap (≤ cap members): buffer the members (bounded by cap)
+  *     and emit every id-ordered pair whose signature agreement reaches
+  *     `minEst` — the [[SigAgreement]] arithmetic, same integer count,
+  *     same double divide, pairs (doc_a < doc_b) because the buffer is
+  *     already id-sorted;
+  *   - over-cap: the moment member cap+1 arrives, flush the buffered
+  *     members as STAR pairs to the bucket-min anchor (the first row)
+  *     and stream every further member the same way — O(bucket) rows,
+  *     O(cap) memory, the skew guard's bound. Star pairs carry the
+  *     IDENTICAL inline agreement the attach-join + [[SigAgreement]]
+  *     path computed (r16 formulation), so est is bit-equal.
+  *
+  * Why: the two-pass formulation shuffled the banded frame TWICE on
+  * (band, bh) — once for the size census, once for the collect_list —
+  * and over-cap members rode two more doc-keyed attach joins. This
+  * pass reads the one sorted exchange and emits only survivors;
+  * memory is bounded by cap member signatures (~264 KB at cap 1000).
+  *
+  * Contract: members with a NULL signature are skipped — they carry
+  * nothing to verify. [[Dedup.minhashSignatures]] never emits them,
+  * but [[Dedup.minhashCandidatePairs]] is public and banding passes a
+  * null `sig` through (DedupSpec pins the skip). */
 private[dedup] final class BucketPairStream(
     rows: Iterator[(Int, Long, Long, Array[Long])],
     k: Int, minEst: Double, cap: Int)

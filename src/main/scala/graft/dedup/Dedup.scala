@@ -116,6 +116,11 @@ object Dedup {
   /** LSH banding over minhash signatures → candidate near-dup pairs with
     * estimated Jaccard (fraction of equal signature positions).
     *
+    * @param sigs       (doc_id, sig) — every non-null `sig` is an array
+    *                   of `bands * rowsPerBand` NON-NULL elements (what
+    *                   [[minhashSignatures]] emits; a null element fails
+    *                   the decode). A row whose `sig` is itself null
+    *                   carries nothing to verify and is skipped.
     * @param bands      number of bands (bands * rowsPerBand = k)
     * @param rowsPerBand signature rows hashed per band
     * @param minEst     keep pairs with estimated Jaccard ≥ this
@@ -132,7 +137,7 @@ object Dedup {
     // lays every bucket out consecutively with its MIN doc_id first.
     // One streaming pass ([[BucketPairStream]]) then does EVERYTHING
     // the r16 two-pass formulation did:
-    //   - under-cap buckets: the BucketPairs loop over the ≤ cap
+    //   - under-cap buckets: a pairwise loop over the ≤ cap
     //     buffered members, emitting only id-ordered pairs whose
     //     agreement reaches minEst (same integer count, same divide);
     //   - over-cap buckets (the skew guard): the moment member cap+1
@@ -568,17 +573,6 @@ object Dedup {
         org.apache.spark.sql.GraftSqlShim.expression(
           TextFunctions.tokens(col("text"))))).as("simhash"))
 
-  /** Resolve near-dup candidate pairs into duplicate CLUSTERS and pick
-    * one survivor per cluster (the min doc_id) — the step that turns
-    * "candidate pairs" into an actual deduplicated corpus.
-    *
-    * Connected components by iterative min-label propagation: each
-    * round, every node takes the min label among itself and its
-    * neighbors; converges in O(component diameter) rounds. Each round is
-    * one join + one aggregate (shuffle on doc id); `localCheckpoint`
-    * cuts the growing lineage so round N doesn't replay rounds 1..N-1.
-    * Returns (doc_id, cluster) for every doc that appears in a pair.
-    */
   /** Driver-side exact union-find for pair sets that fit comfortably in
     * driver memory — collecting 5M pairs is ~80 MB and resolves in
     * milliseconds, versus seconds of scheduling latency PER ROUND for
@@ -612,18 +606,36 @@ object Dedup {
     * O(log diameter) bound against it. */
   @volatile private[graft] var lastLabelPropIterations: Int = -1
 
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 20,
-                      driverMaxPairs: Long = 5000000L): DataFrame = {
+  /** Resolve near-dup candidate pairs into duplicate CLUSTERS and pick
+    * one survivor per cluster (the min doc_id) — the step that turns
+    * "candidate pairs" into an actual deduplicated corpus.
+    *
+    * Up to [[graft.ops.DriverTwin.MaxPairs]] pairs resolve by driver
+    * union-find; larger pair sets by connected components through
+    * iterative min-label propagation: each round, every node takes the
+    * min label among itself and its neighbors; converges in
+    * O(component diameter) rounds. Each round is one join + one
+    * aggregate (shuffle on doc id); a [[graft.ops.Lineage.cut]] cuts
+    * the growing lineage so round N doesn't replay rounds 1..N-1.
+    * Returns (doc_id, cluster) for every doc that appears in a pair.
+    */
+  def nearDupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     lastLabelPropIterations = -1
-    // the pair set feeds THREE plan branches below (two edge directions
-    // + the node list) — persist it or the whole candidate-generation
-    // subtree executes three times
-    val p = pairs.persistT
-    if (p.count() <= driverMaxPairs) {
-      val out = unionFindDriver(p)
-      p.unpersist()
-      return out
-    }
+    // the pair set feeds THREE plan branches of the distributed loop
+    // (two edge directions + the node list) — persisted, or the whole
+    // candidate-generation subtree executes three times
+    graft.ops.DriverTwin.persistCount(pairs, graft.ops.DriverTwin.MaxPairs)(
+      unionFindDriver)(labelPropClusters(_, maxIter))
+  }
+
+  /** [[nearDupClusters]]' distributed label propagation, whatever the
+    * pair count. */
+  private[graft] def nearDupClustersDistributed(pairs: DataFrame,
+                                                maxIter: Int = 20): DataFrame =
+    labelPropClusters(pairs.persistT, maxIter)
+
+  /** `p` = the persisted pair set, unpersisted here. */
+  private def labelPropClusters(p: DataFrame, maxIter: Int): DataFrame = {
     val nodes = p.select(col("doc_a").as("doc_id"))
       .union(p.select(col("doc_b").as("doc_id"))).distinct()
     // bidirectional edges + a self-loop per node: one join+aggregate
@@ -671,7 +683,7 @@ object Dedup {
     } finally {
       edges.unpersist()
       p.unpersist()
-      graft.ops.Lineage.endChain(pairs.sparkSession, chain, deleteLast = false)
+      graft.ops.Lineage.endChain(p.sparkSession, chain, deleteLast = false)
     }
   }
 

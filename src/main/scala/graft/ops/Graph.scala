@@ -38,43 +38,16 @@ object Graph {
     aggregate(array_sort(pairs), lit(0.0),
       (acc, x) => acc + x.getField("c"))
 
-  // ---- driver-gated exact twins (r16 optimization) -----------------
+  // ---- driver twins (r16 optimization) ----------------------------
   //
-  // On a small AGGREGATED edge list the distributed iteration loop's
-  // cost is pure exchange/job overhead: HITS(iters=2) on a PRE-CACHED
-  // 625-row nation edge list measured 4.1 s at local[32] — ~20 AQE
-  // query-stage materializations (per half-step: one groupBy exchange,
-  // one 1-row normalizer aggregate, two broadcast builds), each a
-  // driver round-trip, against microseconds of actual arithmetic.
-  // Mirroring the gated union-find precedent
-  // ([[graft.dedup.Dedup.nearDupClusters]]'s `driverMaxPairs`), the
-  // iteration runs single-threaded on the driver when the graph is
-  // provably tiny, with THE IDENTICAL fold orders (sort contributions
-  // by the same struct key, foldLeft from the same 0.0 init), so the
-  // doubles are bit-equal to the distributed loop's — GraphSpec pins
-  // driver ≡ distributed on both sides of the gate, and the DuckDB
-  // oracles (q117/q136/q183) hash the values end-to-end.
-  //
-  // Gate: nodes are counted anyway (the 1/N init); when |V| ≤
-  // `spark.graft.graph.driverMaxNodes` (default 1024) the edge list is
-  // also counted and the driver path taken iff |E| ≤
-  // `spark.graft.graph.driverMaxEdges` (default 500 000 — ≤ ~20 MB
-  // collected, far under the union-find's 5M-pair precedent). At
-  // cluster scale a billion-node graph never trips the gate; a
-  // dimension-keyed graph (nations, sources, tenants) always does,
-  // and those are exactly the graphs whose iteration is all overhead.
-  // Setting driverMaxNodes (or MaxEdges) to 0 disables the twin.
-  private def driverGate(df: DataFrame, nNodes: Long): Option[Long] = {
-    val conf = df.sparkSession.conf
-    val maxN = conf.getOption("spark.graft.graph.driverMaxNodes")
-      .map(_.toLong).getOrElse(1024L)
-    val maxE = conf.getOption("spark.graft.graph.driverMaxEdges")
-      .map(_.toLong).getOrElse(500000L)
-    if (nNodes <= maxN && maxE > 0L) {
-      val nE = df.count()
-      if (nE <= maxE) Some(nE) else None
-    } else None
-  }
+  // Every operator below except [[symmetrized]] has an exact driver
+  // twin next to its distributed loop, chosen by [[DriverTwin]] from
+  // counts taken at run time (the caps and the reasoning live there).
+  // The twins use THE IDENTICAL fold orders (sort contributions by the
+  // same struct key, foldLeft from the same 0.0 init) or all-integer
+  // arithmetic, so results are bit-equal to the distributed loop's —
+  // GraphSpec pins twin ≡ `*Distributed` for each operator, and the
+  // DuckDB oracles (q117/q136/q183) hash the values end-to-end.
 
   /** Catalyst-identical ordering for collected node ids: numerics by
     * value, strings by BINARY (UTF-8) order — `array_sort` over a
@@ -129,26 +102,11 @@ object Graph {
     */
   def pageRank(edges: DataFrame, nodes: DataFrame, iters: Int,
                damping: Double = 0.85): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0: $iters")
-    val nodeCol = nodes.columns.head
-    val n = nodes.select(col(nodeCol).as("node")).persistT
-    // persist the (already-aggregated, ≤|V|² row) edge list FIRST: it
-    // feeds both the out-strength aggregate and the normalization join
-    // below — unpersisted, the caller's fact-table join pipeline would
-    // execute twice before `e` ever materializes
-    val edges0 = edges.persistT
-    // out-strength per source, joined once onto the tiny edge list so
-    // iterations reuse one persisted (src, dst, frac) frame
-    val wout = edges0.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val e = edges0.join(wout, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double")).as("frac"))
-      .persistT
-    val nNodes = n.count().toDouble
-    val teleport = (1.0 - damping) / nNodes
-    // driver-gated exact twin (see the header note above driverGate):
-    // identical fold orders, bit-equal ranks, ~20 query stages saved.
-    if (driverGate(edges0, nNodes.toLong).isDefined) {
+    val (n, edges0, e, nNodes) = rankInputs(edges, nodes, iters)
+    // driver twin: identical fold orders, bit-equal ranks, ~20 query
+    // stages saved
+    if (DriverTwin.graphFits(nNodes.toLong, edges0)) {
+      val teleport = (1.0 - damping) / nNodes
       val nodeField = n.schema.fields(0)
       val nodeVals = n.collect().map(_.get(0))
       // integral weights (the documented contract): collect the RAW
@@ -200,9 +158,50 @@ object Graph {
           v -> (teleport + damping * (inflow + dang / nNodes))
         }.toMap
       }
-      return smallResult(edges.sparkSession, nodeField,
+      smallResult(edges.sparkSession, nodeField,
         Seq("rank" -> nodeVals.map(rank)), nodeVals)
-    }
+    } else pageRankLoop(n, edges0, e, nNodes, iters, damping)
+  }
+
+  /** [[pageRank]]'s persisted inputs: node ids, the caller's aggregated
+    * edge list, the normalized (src, dst, frac) list, and |V|. */
+  private def rankInputs(edges: DataFrame, nodes: DataFrame, iters: Int)
+      : (DataFrame, DataFrame, DataFrame, Double) = {
+    require(iters >= 0, s"iters must be >= 0: $iters")
+    // persist the (already-aggregated, ≤|V|² row) edge list FIRST: it
+    // feeds both the out-strength aggregate and the normalization join
+    // below — unpersisted, the caller's fact-table join pipeline would
+    // execute twice before `e` ever materializes
+    val (n, edges0, nNodes) = nodesAndEdges(nodes, edges)
+    // out-strength per source, joined once onto the tiny edge list so
+    // iterations reuse one persisted (src, dst, frac) frame
+    val wout = edges0.groupBy(col("src")).agg(sum(col("w")).as("wout"))
+    val e = edges0.join(wout, "src")
+      .select(col("src"), col("dst"),
+        (col("w").cast("double") / col("wout").cast("double")).as("frac"))
+      .persistT
+    (n, edges0, e, nNodes)
+  }
+
+  /** The node ids (as `node`) and an edge frame, both persisted, plus
+    * |V| — the count every 1/N init and the graph gate read. */
+  private def nodesAndEdges(nodes: DataFrame, edges: DataFrame)
+      : (DataFrame, DataFrame, Double) = {
+    val n = nodes.select(col(nodes.columns.head).as("node")).persistT
+    val e = edges.persistT
+    (n, e, n.count().toDouble)
+  }
+
+  /** [[pageRank]]'s distributed loop, whatever the graph's size. */
+  private[graft] def pageRankDistributed(edges: DataFrame, nodes: DataFrame,
+                                         iters: Int, damping: Double = 0.85): DataFrame = {
+    val (n, edges0, e, nNodes) = rankInputs(edges, nodes, iters)
+    pageRankLoop(n, edges0, e, nNodes, iters, damping)
+  }
+
+  private def pageRankLoop(n: DataFrame, edges0: DataFrame, e: DataFrame,
+                           nNodes: Double, iters: Int, damping: Double): DataFrame = {
+    val teleport = (1.0 - damping) / nNodes
     // the dangling SET is iteration-invariant (only its mass changes):
     // resolve it once instead of re-running the src-distinct shuffle
     // plus anti-join inside every iteration
@@ -297,15 +296,9 @@ object Graph {
     * @return (node, hub, auth) — each column L1-normalized over nodes
     */
   def hits(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1: $iters")
-    val nodeCol = nodes.columns.head
-    val n = nodes.select(col(nodeCol).as("node")).persistT
-    val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
-      .persistT
-    val nNodes = n.count().toDouble
-    // driver-gated exact twin (see the header note above driverGate):
-    // identical fold orders, bit-equal hub/auth scores.
-    if (driverGate(e, nNodes.toLong).isDefined) {
+    val (n, e, nNodes) = hitsInputs(edges, nodes, iters)
+    // driver twin: identical fold orders, bit-equal hub/auth scores
+    if (DriverTwin.graphFits(nNodes.toLong, e)) {
       val nodeField = n.schema.fields(0)
       val nodeVals = n.collect().map(_.get(0))
       val eRows = e.collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
@@ -348,9 +341,27 @@ object Graph {
         hub = nodeVals.iterator.map(v => v -> hubRaw(v) / hTot).toMap
       }
       val (hc, ac) = (hub, auth)
-      return smallResult(edges.sparkSession, nodeField,
+      smallResult(edges.sparkSession, nodeField,
         Seq("hub" -> nodeVals.map(hc), "auth" -> nodeVals.map(ac)), nodeVals)
-    }
+    } else hitsLoop(n, e, nNodes, iters)
+  }
+
+  private def hitsInputs(edges: DataFrame, nodes: DataFrame, iters: Int)
+      : (DataFrame, DataFrame, Double) = {
+    require(iters >= 1, s"iters must be >= 1: $iters")
+    nodesAndEdges(nodes,
+      edges.select(col("src"), col("dst"), col("w").cast("double").as("w")))
+  }
+
+  /** [[hits]]'s distributed loop, whatever the graph's size. */
+  private[graft] def hitsDistributed(edges: DataFrame, nodes: DataFrame,
+                                     iters: Int): DataFrame = {
+    val (n, e, nNodes) = hitsInputs(edges, nodes, iters)
+    hitsLoop(n, e, nNodes, iters)
+  }
+
+  private def hitsLoop(n: DataFrame, e: DataFrame, nNodes: Double,
+                       iters: Int): DataFrame = {
     val levels = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var hub = n.select(col("node"), (lit(1.0) / lit(nNodes)).as("hub")).persistT
     levels += hub
@@ -413,93 +424,92 @@ object Graph {
     * @return 1 row: (n_nodes, n_edges, n_wedges, n_triangles,
     *         clustering = 3T/W; nodes = endpoints of ≥1 edge)
     */
-  def triangleStats(edges: DataFrame): DataFrame = {
-    val und0 = edges
+  def triangleStats(edges: DataFrame): DataFrame =
+    // driver twin: the census is all integers (exact regardless of
+    // execution order); the distributed path costs 3 persists + a
+    // wedge join — ~10 query stages for a dimension-sized graph. Same
+    // degree-ordered orientation, so the driver does the identical
+    // O(Σ C(outdeg,2)) wedge work, just single-threaded.
+    DriverTwin.persistCount(undirectedPairs(edges), DriverTwin.MaxEdges) { undC =>
+      val arr = undC.collect().map(r => (r.get(0), r.get(1)))
+      val nE = arr.length.toLong
+      // dense int ids so the hot loops are primitive-array work
+      // (the first HashSet-of-tuples formulation was SLOWER than the
+      // distributed join on clique-heavy near-dup graphs)
+      val id = scala.collection.mutable.HashMap.empty[Any, Int]
+      def idOf(v: Any): Int = id.getOrElseUpdate(v, id.size)
+      val ea = new Array[Int](arr.length); val eb = new Array[Int](arr.length)
+      var x = 0
+      while (x < arr.length) { ea(x) = idOf(arr(x)._1); eb(x) = idOf(arr(x)._2); x += 1 }
+      val nN = id.size
+      val nodeVal = new Array[Any](nN)
+      id.foreach { case (v, i) => nodeVal(i) = v }
+      val deg = new Array[Long](nN)
+      x = 0; while (x < arr.length) { deg(ea(x)) += 1; deg(eb(x)) += 1; x += 1 }
+      // orient (deg, id)-smaller → larger; triangle count = Σ over
+      // oriented edges (a,b) of |out(a) ∩ out(b)| — each triangle
+      // counted once at its lowest-rank vertex (the same orientation
+      // the distributed wedge join uses), all integer arithmetic
+      def fwd(a: Int, b: Int): Boolean =
+        deg(a) < deg(b) || (deg(a) == deg(b) && anyOrd.lt(nodeVal(a), nodeVal(b)))
+      val outDeg = new Array[Int](nN)
+      x = 0
+      while (x < arr.length) {
+        if (fwd(ea(x), eb(x))) outDeg(ea(x)) += 1 else outDeg(eb(x)) += 1
+        x += 1
+      }
+      val outAdj = Array.tabulate(nN)(i => new Array[Int](outDeg(i)))
+      val fill = new Array[Int](nN)
+      x = 0
+      while (x < arr.length) {
+        val (a, b) = if (fwd(ea(x), eb(x))) (ea(x), eb(x)) else (eb(x), ea(x))
+        outAdj(a)(fill(a)) = b; fill(a) += 1
+        x += 1
+      }
+      var i0 = 0
+      while (i0 < nN) { java.util.Arrays.sort(outAdj(i0)); i0 += 1 }
+      var tri = 0L
+      x = 0
+      while (x < arr.length) {
+        val (a, b) = if (fwd(ea(x), eb(x))) (ea(x), eb(x)) else (eb(x), ea(x))
+        val (oa, ob) = (outAdj(a), outAdj(b))
+        var i = 0; var j = 0
+        while (i < oa.length && j < ob.length) {
+          if (oa(i) == ob(j)) { tri += 1; i += 1; j += 1 }
+          else if (oa(i) < ob(j)) i += 1
+          else j += 1
+        }
+        x += 1
+      }
+      val nNodes = nN.toLong
+      val nWedges = deg.iterator.map(d => d * (d - 1) / 2).sum
+      import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+      val schema = StructType(Seq(
+        StructField("n_nodes", LongType, nullable = false),
+        StructField("n_edges", LongType, nullable = false),
+        StructField("n_wedges", LongType, nullable = true),
+        StructField("n_triangles", LongType, nullable = false),
+        StructField("clustering", DoubleType, nullable = true)))
+      val row = org.apache.spark.sql.Row(nNodes, nE, nWedges, tri,
+        tri.toDouble * 3.0 / nWedges.toDouble)
+      edges.sparkSession.createDataFrame(java.util.Arrays.asList(row), schema)
+    }(triangleLoop)
+
+  /** [[triangleStats]]' input: distinct undirected (u < v) pairs. */
+  private def undirectedPairs(edges: DataFrame): DataFrame =
+    edges
       .select(least(col("src"), col("dst")).as("u"),
               greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-    // driver-gated exact twin (see driverGate's header note): the
-    // census is all integers (exact regardless of execution order);
-    // the distributed path costs 3 persists + a wedge join — ~10
-    // query stages for a dimension-sized graph. Same degree-ordered
-    // orientation, so the driver does the identical O(Σ C(outdeg,2))
-    // wedge work, just single-threaded.
-    val maxE = edges.sparkSession.conf
-      .getOption("spark.graft.graph.driverMaxEdges")
-      .map(_.toLong).getOrElse(500000L)
-    if (maxE > 0L) {
-      val undC = und0.persistT
-      val nE = undC.count()
-      if (nE <= maxE) {
-        val arr = undC.collect().map(r => (r.get(0), r.get(1)))
-        undC.unpersist(blocking = false)
-        // dense int ids so the hot loops are primitive-array work
-        // (the first HashSet-of-tuples formulation was SLOWER than the
-        // distributed join on clique-heavy near-dup graphs)
-        val id = scala.collection.mutable.HashMap.empty[Any, Int]
-        def idOf(v: Any): Int = id.getOrElseUpdate(v, id.size)
-        val ea = new Array[Int](arr.length); val eb = new Array[Int](arr.length)
-        var x = 0
-        while (x < arr.length) { ea(x) = idOf(arr(x)._1); eb(x) = idOf(arr(x)._2); x += 1 }
-        val nN = id.size
-        val nodeVal = new Array[Any](nN)
-        id.foreach { case (v, i) => nodeVal(i) = v }
-        val deg = new Array[Long](nN)
-        x = 0; while (x < arr.length) { deg(ea(x)) += 1; deg(eb(x)) += 1; x += 1 }
-        // orient (deg, id)-smaller → larger; triangle count = Σ over
-        // oriented edges (a,b) of |out(a) ∩ out(b)| — each triangle
-        // counted once at its lowest-rank vertex (the same orientation
-        // the distributed wedge join uses), all integer arithmetic
-        def fwd(a: Int, b: Int): Boolean =
-          deg(a) < deg(b) || (deg(a) == deg(b) && anyOrd.lt(nodeVal(a), nodeVal(b)))
-        val outDeg = new Array[Int](nN)
-        x = 0
-        while (x < arr.length) {
-          if (fwd(ea(x), eb(x))) outDeg(ea(x)) += 1 else outDeg(eb(x)) += 1
-          x += 1
-        }
-        val outAdj = Array.tabulate(nN)(i => new Array[Int](outDeg(i)))
-        val fill = new Array[Int](nN)
-        x = 0
-        while (x < arr.length) {
-          val (a, b) = if (fwd(ea(x), eb(x))) (ea(x), eb(x)) else (eb(x), ea(x))
-          outAdj(a)(fill(a)) = b; fill(a) += 1
-          x += 1
-        }
-        var i0 = 0
-        while (i0 < nN) { java.util.Arrays.sort(outAdj(i0)); i0 += 1 }
-        var tri = 0L
-        x = 0
-        while (x < arr.length) {
-          val (a, b) = if (fwd(ea(x), eb(x))) (ea(x), eb(x)) else (eb(x), ea(x))
-          val (oa, ob) = (outAdj(a), outAdj(b))
-          var i = 0; var j = 0
-          while (i < oa.length && j < ob.length) {
-            if (oa(i) == ob(j)) { tri += 1; i += 1; j += 1 }
-            else if (oa(i) < ob(j)) i += 1
-            else j += 1
-          }
-          x += 1
-        }
-        val nNodes = nN.toLong
-        val nWedges = deg.iterator.map(d => d * (d - 1) / 2).sum
-        import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("n_nodes", LongType, nullable = false),
-          StructField("n_edges", LongType, nullable = false),
-          StructField("n_wedges", LongType, nullable = true),
-          StructField("n_triangles", LongType, nullable = false),
-          StructField("clustering", DoubleType, nullable = true)))
-        val row = org.apache.spark.sql.Row(nNodes, nE, nWedges, tri,
-          tri.toDouble * 3.0 / nWedges.toDouble)
-        return edges.sparkSession.createDataFrame(
-          java.util.Arrays.asList(row), schema)
-      }
-      undC.unpersist(blocking = false)
-    }
-    val und = und0
-      .persistT // feeds the degree pass AND the orientation join
+
+  /** [[triangleStats]]' distributed census, whatever the graph's size. */
+  private[graft] def triangleStatsDistributed(edges: DataFrame): DataFrame =
+    triangleLoop(undirectedPairs(edges).persistT)
+
+  /** `und` must be persisted: it feeds the degree pass AND the
+    * orientation join. */
+  private def triangleLoop(und: DataFrame): DataFrame = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg"))
       .persistT // feeds both endpoint joins + the wedge total
@@ -568,15 +578,11 @@ object Graph {
     * @return (node, community) — community = the converged label
     */
   def labelPropagation(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0: $iters")
-    val nodeCol = nodes.columns.head
-    val n = nodes.select(col(nodeCol).as("node")).persistT
-    val e = symmetrized(edges).persistT
-    // driver-gated exact twin (see the header note above driverGate):
-    // all-integer weight sums + (weight desc, label asc) argmax —
-    // order-free arithmetic, so equality with the distributed loop is
-    // exact by construction.
-    if (driverGate(e, n.count()).isDefined) {
+    val (n, e, nNodes) = lpaInputs(edges, nodes, iters)
+    // driver twin: all-integer weight sums + (weight desc, label asc)
+    // argmax — order-free arithmetic, so equality with the distributed
+    // loop is exact by construction.
+    if (DriverTwin.graphFits(nNodes.toLong, e)) {
       val nodeField = n.schema.fields(0)
       val nodeVals = n.collect().map(_.get(0))
       val eRows = e.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
@@ -608,9 +614,24 @@ object Graph {
       val schema = StructType(Seq(nodeField.copy(name = "node"),
         nodeField.copy(name = "community")))
       val rows = nodeVals.map(v => org.apache.spark.sql.Row(v, lbl(v)))
-      return edges.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
-    }
+      edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    } else lpaLoop(n, e, iters)
+  }
+
+  private def lpaInputs(edges: DataFrame, nodes: DataFrame, iters: Int)
+      : (DataFrame, DataFrame, Double) = {
+    require(iters >= 0, s"iters must be >= 0: $iters")
+    nodesAndEdges(nodes, symmetrized(edges))
+  }
+
+  /** [[labelPropagation]]'s distributed loop, whatever the graph's size. */
+  private[graft] def labelPropagationDistributed(edges: DataFrame, nodes: DataFrame,
+                                                 iters: Int): DataFrame = {
+    val (n, e, _) = lpaInputs(edges, nodes, iters)
+    lpaLoop(n, e, iters)
+  }
+
+  private def lpaLoop(n: DataFrame, e: DataFrame, iters: Int): DataFrame = {
     val chain = Lineage.newChain("lpa")
     // try/finally (ADVICE r11): a mid-loop failure must still close the
     // chain's bookkeeping (a strong SparkSession ref) and drop the
@@ -634,7 +655,7 @@ object Graph {
     } finally {
       e.unpersist(blocking = false)
       n.unpersist(blocking = false)
-      Lineage.endChain(edges.sparkSession, chain, deleteLast = false)
+      Lineage.endChain(e.sparkSession, chain, deleteLast = false)
     }
   }
 
@@ -661,63 +682,64 @@ object Graph {
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     val e = symmetrized(edges).persistT
-    // driver-gated exact twin (see driverGate's header note): all the
-    // arithmetic is order-free — Long sums, DECIMAL(38,0) products of
-    // exact integers, one final double division — so the twin is exact
-    // by construction. The distributed path on a dimension-keyed graph
-    // is ~6 query stages (two persists, two rollup exchanges, two 1-row
-    // collects) for microseconds of math.
-    val conf = e.sparkSession.conf
-    val maxN = conf.getOption("spark.graft.graph.driverMaxNodes")
-      .map(_.toLong).getOrElse(1024L)
-    val maxE = conf.getOption("spark.graft.graph.driverMaxEdges")
-      .map(_.toLong).getOrElse(500000L)
+    // driver twin: all the arithmetic is order-free — Long sums,
+    // DECIMAL(38,0) products of exact integers, one final double
+    // division — so the twin is exact by construction. The distributed
+    // path on a dimension-keyed graph is ~6 query stages (two persists,
+    // two rollup exchanges, two 1-row collects) for microseconds of math.
     // Gate order (ADVICE r16 #2): e.count() first — e is persisted and
     // the distributed path reads it anyway, while labels.count() is a
     // full extra materialization of the (possibly LPA-deep) labels
     // lineage; short-circuit so it only runs once the edge cap passed.
-    if (maxN > 0L && maxE > 0L && e.count() <= maxE && labels.count() <= maxN) {
-        val eRows = e.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
-        e.unpersist(blocking = false)
-        val lab: Map[Any, Any] =
-          labels.collect().map(r => (r.get(0), r.get(1))).toMap
-        import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("two_m", LongType), StructField("modularity", DoubleType)))
-        val out: org.apache.spark.sql.Row = if (eRows.isEmpty) {
-          // distributed: sum over an empty frame is NULL for both
-          org.apache.spark.sql.Row(null, null)
-        } else {
-          var twoM = 0L
-          eRows.foreach(t => twoM += t._3) // Long wrap semantics = sum(long)
-          // joined = e INNER JOIN labels on both endpoints
-          val totC = scala.collection.mutable.HashMap.empty[Any, Long]
-          val inC = scala.collection.mutable.HashMap.empty[Any, Long]
-          eRows.foreach { case (s0, d0, w) =>
-            (lab.get(s0), lab.get(d0)) match {
-              case (Some(ca), Some(cb)) =>
-                totC.update(ca, totC.getOrElse(ca, 0L) + w)
-                if (ca == cb) inC.update(ca, inC.getOrElse(ca, 0L) + w)
-              case _ => // unlabeled endpoint: inner join drops the edge
-            }
-          }
-          if (totC.isEmpty) org.apache.spark.sql.Row(twoM, null)
-          else {
-            val twoMB = BigInt(twoM)
-            var numer = BigInt(0)
-            totC.foreach { case (c, tot) =>
-              numer += BigInt(inC.getOrElse(c, 0L)) * twoMB - BigInt(tot) * BigInt(tot)
-            }
-            // Decimal(38,0) -> double is BigDecimal.doubleValue; the
-            // divide chain mirrors cast(numer)/(cast(2m)*cast(2m))
-            val q = new java.math.BigDecimal(numer.bigInteger).doubleValue() /
-              (twoM.toDouble * twoM.toDouble)
-            org.apache.spark.sql.Row(twoM, q)
+    if (e.count() <= DriverTwin.MaxEdges && labels.count() <= DriverTwin.MaxNodes) {
+      val eRows = e.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
+      e.unpersist(blocking = false)
+      val lab: Map[Any, Any] =
+        labels.collect().map(r => (r.get(0), r.get(1))).toMap
+      import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+      val schema = StructType(Seq(
+        StructField("two_m", LongType), StructField("modularity", DoubleType)))
+      val out: org.apache.spark.sql.Row = if (eRows.isEmpty) {
+        // distributed: sum over an empty frame is NULL for both
+        org.apache.spark.sql.Row(null, null)
+      } else {
+        var twoM = 0L
+        eRows.foreach(t => twoM += t._3) // Long wrap semantics = sum(long)
+        // joined = e INNER JOIN labels on both endpoints
+        val totC = scala.collection.mutable.HashMap.empty[Any, Long]
+        val inC = scala.collection.mutable.HashMap.empty[Any, Long]
+        eRows.foreach { case (s0, d0, w) =>
+          (lab.get(s0), lab.get(d0)) match {
+            case (Some(ca), Some(cb)) =>
+              totC.update(ca, totC.getOrElse(ca, 0L) + w)
+              if (ca == cb) inC.update(ca, inC.getOrElse(ca, 0L) + w)
+            case _ => // unlabeled endpoint: inner join drops the edge
           }
         }
-        return e.sparkSession.createDataFrame(
-          java.util.Arrays.asList(out), schema)
-    }
+        if (totC.isEmpty) org.apache.spark.sql.Row(twoM, null)
+        else {
+          val twoMB = BigInt(twoM)
+          var numer = BigInt(0)
+          totC.foreach { case (c, tot) =>
+            numer += BigInt(inC.getOrElse(c, 0L)) * twoMB - BigInt(tot) * BigInt(tot)
+          }
+          // Decimal(38,0) -> double is BigDecimal.doubleValue; the
+          // divide chain mirrors cast(numer)/(cast(2m)*cast(2m))
+          val q = new java.math.BigDecimal(numer.bigInteger).doubleValue() /
+            (twoM.toDouble * twoM.toDouble)
+          org.apache.spark.sql.Row(twoM, q)
+        }
+      }
+      e.sparkSession.createDataFrame(java.util.Arrays.asList(out), schema)
+    } else modularityLoop(e, labels)
+  }
+
+  /** [[modularity]]'s distributed rollups, whatever the graph's size. */
+  private[graft] def modularityDistributed(edges: DataFrame, labels: DataFrame): DataFrame =
+    modularityLoop(symmetrized(edges).persistT, labels)
+
+  /** `e` = the persisted [[symmetrized]] adjacency, unpersisted here. */
+  private def modularityLoop(e: DataFrame, labels: DataFrame): DataFrame = {
     val la = labels.select(col("node").as("src"), col("community").as("ca"))
     val lb = labels.select(col("node").as("dst"), col("community").as("cb"))
     val twoM = e.agg(sum(col("w")).as("two_m"))
@@ -772,22 +794,13 @@ object Graph {
     *              not a silent truncation)
     * @return the surviving edge list (a, b)
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    val chain = Lineage.newChain("kcore")
-    try {
-      var e = Lineage.cut(edges.select(col("a"), col("b")), chain)
-      var prev = e.count()
-      // driver-gated exact twin (see driverGate's header note): the
-      // peeling fixpoint is monotone integer set shrinkage — execution
-      // order cannot change it — and the edge count needed for the
-      // gate is the count the loop takes anyway. R distributed rounds
-      // = ~4R query stages; the twin is one collect.
-      val maxE = edges.sparkSession.conf
-        .getOption("spark.graft.graph.driverMaxEdges")
-        .map(_.toLong).getOrElse(500000L)
-      if (prev <= maxE && maxE > 0L) {
-        val schema = e.schema
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame =
+    kCoreInputs(edges, k) { (e, nE, chain) =>
+      // driver twin: the peeling fixpoint is monotone integer set
+      // shrinkage — execution order cannot change it — and the edge
+      // count the gate reads is the count the loop takes anyway. R
+      // distributed rounds = ~4R query stages; the twin is one collect.
+      if (nE <= DriverTwin.MaxEdges) {
         var arr = e.collect().map(r => (r.get(0), r.get(1)))
         var rounds = 0
         var converged = arr.length == 0
@@ -805,30 +818,51 @@ object Graph {
           rounds += 1
         }
         val rows = arr.map(t => org.apache.spark.sql.Row(t._1, t._2))
-        return edges.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), schema)
-      }
-      var rounds = 0
-      var converged = prev == 0L
-      while (!converged) {
-        require(rounds < maxRounds,
-          s"kCore did not converge within $maxRounds rounds (edges=$prev)")
-        val deg = e.select(col("a").as("node"))
-          .unionAll(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        val keep = deg.where(col("deg") >= k).select(col("node"))
-        val next = Lineage.cut(
-          e.join(keep.select(col("node").as("a")), Seq("a"))
-            .join(keep.select(col("node").as("b")), Seq("b"))
-            .select(col("a"), col("b")), chain)
-        val cnt = next.count()
-        converged = cnt == prev
-        prev = cnt
-        e = next
-        rounds += 1
-      }
-      e
+        edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), e.schema)
+      } else kCoreLoop(e, nE, k, maxRounds, chain)
+    }
+
+  /** [[kCore]]'s distributed peeling, whatever the graph's size. */
+  private[graft] def kCoreDistributed(edges: DataFrame, k: Int,
+                                      maxRounds: Int = 50): DataFrame =
+    kCoreInputs(edges, k)(kCoreLoop(_, _, k, maxRounds, _))
+
+  /** Run `body` over the edge list cut onto a fresh "kcore" chain,
+    * with its (free — the cut materialized it) edge count. */
+  private def kCoreInputs(edges: DataFrame, k: Int)(
+      body: (DataFrame, Long, String) => DataFrame): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
+    val chain = Lineage.newChain("kcore")
+    try {
+      val e = Lineage.cut(edges.select(col("a"), col("b")), chain)
+      body(e, e.count(), chain)
     } finally Lineage.endChain(edges.sparkSession, chain, deleteLast = false)
+  }
+
+  private def kCoreLoop(e0: DataFrame, nE: Long, k: Int, maxRounds: Int,
+                        chain: String): DataFrame = {
+    var e = e0
+    var prev = nE
+    var rounds = 0
+    var converged = prev == 0L
+    while (!converged) {
+      require(rounds < maxRounds,
+        s"kCore did not converge within $maxRounds rounds (edges=$prev)")
+      val deg = e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      val keep = deg.where(col("deg") >= k).select(col("node"))
+      val next = Lineage.cut(
+        e.join(keep.select(col("node").as("a")), Seq("a"))
+          .join(keep.select(col("node").as("b")), Seq("b"))
+          .select(col("a"), col("b")), chain)
+      val cnt = next.count()
+      converged = cnt == prev
+      prev = cnt
+      e = next
+      rounds += 1
+    }
+    e
   }
 
   /** Multi-source breadth-first search: exact minimum hop distance
@@ -856,25 +890,12 @@ object Graph {
     *         reached node
     */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    // undirected, self-loop-free, deduplicated adjacency (unweighted —
-    // symmetrized() is the weighted variant for LPA/modularity)
-    val adj = edges.select(col("a"), col("b"))
-      .where(col("a") =!= col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b"))
-        .where(col("a") =!= col("b")))
-      .distinct().persist()
-    val nAdj = adj.count() // materialize once; every round probes it
-    val seed0 = seeds.toDF("node").distinct()
-    // driver-gated exact twin (see driverGate's header note): BFS
-    // distances are integers from a deterministic frontier fixpoint —
-    // order-free. Gated on the adjacency count the loop materializes
-    // anyway; type-guarded so a seed/edge type mismatch falls through
-    // to the distributed union (which coerces).
-    val maxE = edges.sparkSession.conf
-      .getOption("spark.graft.graph.driverMaxEdges")
-      .map(_.toLong).getOrElse(500000L)
-    if (nAdj <= maxE && maxE > 0L &&
+    val (adj, nAdj, seed0) = bfsInputs(edges, seeds, maxHops)
+    // driver twin: BFS distances are integers from a deterministic
+    // frontier fixpoint — order-free. Gated on the adjacency count the
+    // loop materializes anyway; type-guarded so a seed/edge type
+    // mismatch falls through to the distributed union (which coerces).
+    if (nAdj <= DriverTwin.MaxEdges &&
         adj.schema.fields(0).dataType == seed0.schema.fields(0).dataType) {
       val adjMap = adj.collect().map(r => (r.get(0), r.get(1)))
         .groupBy(_._1).map { case (a, arr) => a -> arr.map(_._2) }
@@ -896,9 +917,34 @@ object Graph {
       val schema = StructType(Seq(seed0.schema.fields(0).copy(name = "node"),
         StructField("dist", IntegerType, nullable = false)))
       val rows = visited.toSeq.map { case (v, d) => org.apache.spark.sql.Row(v, d) }
-      return edges.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
-    }
+      edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    } else bfsLoop(adj, seed0, maxHops)
+  }
+
+  /** Undirected, self-loop-free, deduplicated adjacency (unweighted —
+    * [[symmetrized]] is the weighted variant for LPA/modularity),
+    * persisted and counted once (every round probes it), plus the
+    * distinct seeds. */
+  private def bfsInputs(edges: DataFrame, seeds: DataFrame, maxHops: Int)
+      : (DataFrame, Long, DataFrame) = {
+    require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
+    val adj = edges.select(col("a"), col("b"))
+      .where(col("a") =!= col("b"))
+      .unionAll(edges.select(col("b").as("a"), col("a").as("b"))
+        .where(col("a") =!= col("b")))
+      .distinct().persist()
+    (adj, adj.count(), seeds.toDF("node").distinct())
+  }
+
+  /** [[bfs]]'s distributed frontier loop, whatever the graph's size. */
+  private[graft] def bfsDistributed(edges: DataFrame, seeds: DataFrame,
+                                    maxHops: Int): DataFrame = {
+    val (adj, _, seed0) = bfsInputs(edges, seeds, maxHops)
+    bfsLoop(adj, seed0, maxHops)
+  }
+
+  /** `adj` is unpersisted here. */
+  private def bfsLoop(adj: DataFrame, seed0: DataFrame, maxHops: Int): DataFrame = {
     // TWO live frames per round (frontier + visited) → two distinct
     // cut-chains, unique per invocation, so reliable-mode pruning only
     // ever deletes a checkpoint this loop has finished reading
@@ -908,7 +954,7 @@ object Graph {
     // deleted at exit; the visited-chain's final dir IS the result.
     val visChain = Lineage.newChain("bfs-visited")
     val nextChain = Lineage.newChain("bfs-next")
-    val spark = edges.sparkSession
+    val spark = adj.sparkSession
     try {
       var visited = Lineage.cut(seed0.select(col("node"), lit(0).as("dist")), visChain)
       var frontier = visited

@@ -47,8 +47,7 @@ import org.apache.spark.sql.DataFrame
   * bookkeeping and optionally deletes a final INTERMEDIATE checkpoint.
   * Chainless `cut(df)` is untracked: never prunes, never pruned — the
   * only safe default for a one-shot checkpoint whose data stays live
-  * with the returned frame. `spark.graft.lineage.pruneCheckpoints=
-  * false` disables deletion entirely.
+  * with the returned frame.
   *
   * Both modes materialize eagerly and preserve values exactly
   * (LineageSpec pins equality); only failure-recovery semantics and
@@ -58,7 +57,6 @@ import org.apache.spark.sql.DataFrame
 object Lineage extends Logging {
 
   val ConfKey = "spark.graft.lineage.cut"
-  val PruneKey = "spark.graft.lineage.pruneCheckpoints"
 
   /** Previous reliable-checkpoint dir, keyed per (session, chain).
     *
@@ -91,7 +89,7 @@ object Lineage extends Logging {
     *
     * @param chain cut-chain name: consecutive `cut`s on one chain form
     *              one `x = cut(step(x))` loop, and in reliable mode
-    *              with pruning each cut deletes the SAME chain's
+    *              each cut deletes the SAME chain's
     *              previous checkpoint once the new one materializes.
     *              An operator with several live frames (BFS: frontier
     *              + visited) must use one chain per frame. */
@@ -113,8 +111,7 @@ object Lineage extends Logging {
         // checkpoint root, only the map entry and session ref leak)
         val it = lastCheckpoint.keySet().iterator()
         while (it.hasNext) if (it.next()._1.stopped) it.remove()
-        if (chain != DefaultChain &&
-            session.conf.get(PruneKey, "true") == "true") {
+        if (chain != DefaultChain) {
           // the checkpointed frame is a LogicalRDD over the RDD that
           // carries the checkpoint data — ask it where it wrote
           val newDir = out.queryExecution.analyzed match {

@@ -274,14 +274,12 @@ object RelationalOps {
   def asofJoinLatest(left: DataFrame, right: DataFrame, key: String,
                      leftTime: String, rightTime: String,
                      rightCols: Seq[String]): DataFrame = {
-    val l = left.select(col(key).as("__k"), col(leftTime).as("__t"),
-      lit(1).as("__side"), struct(left.columns.map(col): _*).as("__lp"),
-      lit(null).as("__rp"))
+    // the left payload struct has exactly left's schema as its type
     val r = right.select(col(key).as("__k"), col(rightTime).as("__t"),
       lit(0).as("__side"),
-      lit(null).cast(l.schema("__lp").dataType).as("__lp"),
+      lit(null).cast(left.schema).as("__lp"),
       struct(rightCols.map(col): _*).as("__rp"))
-    val lTyped = left.select(col(key).as("__k"), col(leftTime).as("__t"),
+    val l = left.select(col(key).as("__k"), col(leftTime).as("__t"),
       lit(1).as("__side"), struct(left.columns.map(col): _*).as("__lp"),
       lit(null).cast(r.schema("__rp").dataType).as("__rp"))
     // rights sort before lefts at equal time (__side 0 < 1) so an exact
@@ -290,7 +288,7 @@ object RelationalOps {
     val w = Window.partitionBy("__k")
       .orderBy(col("__t"), col("__side"), col("__rp"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r.unionByName(lTyped)
+    r.unionByName(l)
       .withColumn("asof", last(col("__rp"), ignoreNulls = true).over(w))
       .where(col("__side") === 1)
       .select(col("__lp.*"), col("asof"))
@@ -514,11 +512,10 @@ object RelationalOps {
     * unpersist falls to the ContextCleaner (lazy plan), as in
     * tokenShards.
     *
-    * Driver-gated twin (r17, the Graph.scala gate discipline): when the
-    * caller KNOWS the exact row count (it is usually already an action
-    * in these query shapes — q260 needs nc for the quintile formula)
-    * and it is at most `spark.graft.rownum.driverMaxRows` (default
-    * 262144; 0 disables), the whole rank rides ONE
+    * Driver twin (r17, see [[DriverTwin]]): when the caller KNOWS the
+    * exact row count (it is usually already an action in these query
+    * shapes — q260 needs nc for the quintile formula) and it is at most
+    * [[DriverTwin.MaxRankRows]], the whole rank rides ONE
     * TakeOrderedAndProject job — per-partition heaps, no range-sampling
     * job, no exchange, no second pass — and rn is attached by position
     * on the driver. The ORDERING is still computed by Spark's own sort
@@ -527,14 +524,12 @@ object RelationalOps {
     * billion-row frame never trips the gate and takes the
     * range-partitioned path unchanged. `knownRows` must be the exact
     * count (an understatement would truncate; RelationalOpsSpec pins
-    * gated ≡ distributed on both sides). */
+    * the twin ≡ [[globalRowNumberDistributed]]). */
   def globalRowNumber(df: DataFrame, order: Seq[Column],
                       outCol: String = "rn", partitions: Int = 0,
-                      knownRows: Long = -1L): DataFrame = {
-    val spark = df.sparkSession
-    val cap = spark.conf.getOption("spark.graft.rownum.driverMaxRows")
-      .map(_.toLong).getOrElse(262144L)
-    if (knownRows >= 0L && cap > 0L && knownRows <= cap) {
+                      knownRows: Long = -1L): DataFrame =
+    if (knownRows >= 0L && knownRows <= DriverTwin.MaxRankRows) {
+      val spark = df.sparkSession
       val rows = df.orderBy(order: _*).limit(math.max(knownRows, 1L).toInt).collect()
       val schema = org.apache.spark.sql.types.StructType(
         df.schema.fields :+
@@ -543,9 +538,14 @@ object RelationalOps {
       val out = rows.iterator.zipWithIndex.map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
       }.toSeq
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out, 1), schema)
-    }
+      spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    } else globalRowNumberDistributed(df, order, outCol, partitions)
+
+  /** [[globalRowNumber]]'s range-partitioned path, whatever the size. */
+  private[graft] def globalRowNumberDistributed(df: DataFrame, order: Seq[Column],
+                                                outCol: String = "rn",
+                                                partitions: Int = 0): DataFrame = {
+    val spark = df.sparkSession
     val nParts = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
     val sorted = df

@@ -55,7 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             if (children.length == 2) " where the second is not an integer literal" else ""))
       }))
     // optimizer rule: pure |a-b|<=tol theta joins → bucketized equi
-    // joins (see RewriteRangeJoin; gate spark.graft.rewriteRangeJoin)
+    // joins (see RewriteRangeJoin)
     ext.injectOptimizerRule(RewriteRangeJoin)
     // optimizer rule: plain aggregates over a scan with a registered
     // lockstep materialized view serve from the view (see

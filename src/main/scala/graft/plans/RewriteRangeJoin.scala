@@ -30,16 +30,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Matched shapes (either side of the comparison, either operand
   * order inside abs): `abs(x − y) <= lit`, `abs(x − y) < lit` with an
   * integral literal, x and y integral (e.g. `unix_millis(ts)`),
-  * deterministic, and each referencing exactly one join side. Gate:
-  * `spark.graft.rewriteRangeJoin` (default true).
+  * deterministic, and each referencing exactly one join side.
   */
 case class RewriteRangeJoin(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private val BucketL = "__graft_bucket_l"
   private val BucketR = "__graft_bucket_r"
-
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.rewriteRangeJoin", "true") == "true"
 
   /** |x − y| ≤/< tol with an integral positive literal. A null
     * tolerance never matches (the comparison is never true; leave the
@@ -91,7 +87,6 @@ case class RewriteRangeJoin(spark: SparkSession) extends Rule[LogicalPlan] {
     else None
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           // batch only: Structured Streaming derives stream-stream

@@ -2253,7 +2253,14 @@ object ExtendedCoreQueries {
     * double sum inside the iteration is an ordered sequential fold, so
     * the rank VALUES (not just the ranking) hash-match the oracle's
     * unrolled 3-iteration SQL. */
-  private def q117(s: SparkSession, d: String): DataFrame = {
+  private def q117(s: SparkSession, d: String): DataFrame =
+    q117With(s, d, graft.ops.Graph.pageRank(_, _, _))
+
+  /** q117 over any PageRank body with [[graft.ops.Graph.pageRank]]'s
+    * (edges, nodes, iters) signature — PlanShapeSpec pins the plan of
+    * the distributed one too. */
+  private[graft] def q117With(s: SparkSession, d: String,
+                              rank: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
       d184(col("l_extendedprice")).as("price"))
     val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
@@ -2267,7 +2274,7 @@ object ExtendedCoreQueries {
       .groupBy("src", "dst")
       .agg((sum(col("price")) * lit(10000)).cast(LongType).as("w"))
     val nation = t(s, d, "nation")
-    val pr = graft.ops.Graph.pageRank(edges, nation.select("n_nationkey"), iters = 3)
+    val pr = rank(edges, nation.select("n_nationkey"), 3)
     pr.join(broadcast(nation.select(col("n_nationkey"), col("n_name"))),
         pr("node") === col("n_nationkey"))
       .select(col("n_nationkey"), col("n_name"), col("rank"))

@@ -224,36 +224,43 @@ object Bpe {
     * never was. */
   def fitDistributedTable(docs: DataFrame, numMerges: Int,
                           textCol: String = "text", maxWordLen: Int = 256): DataFrame = {
+    // Driver twin (r17, see graft.ops.DriverTwin): the merge loop's
+    // state is the pretoken-TYPE census — vocabulary-bounded, MBs for
+    // natural language — while each distributed round costs a
+    // pair-census exchange + a 1-row argmax collect + a checkpoint
+    // (~3 jobs × numMerges for microseconds of math). When the census
+    // holds at most DriverTwin.MaxBpeTypes rows, collect it once and
+    // run the IDENTICAL loop locally ([[trainTableFromCounts]] — same
+    // argmax, same cpCompare tie-break, same early stop; BpeSpec pins
+    // it merge-for-merge against [[fitDistributedLoop]]). Adversarially
+    // diverse text (web garbage, code identifiers) blows past the cap
+    // and keeps the distributed loop, which reads the census the
+    // gate's count just materialized.
     val spark = docs.sparkSession
-    // Driver-gated exact twin (r17, the Graph.scala gate discipline):
-    // the merge loop's state is the pretoken-TYPE census — vocabulary-
-    // bounded, MBs for natural language — while each distributed round
-    // costs a pair-census exchange + a 1-row argmax collect + a
-    // checkpoint (~3 jobs × numMerges for microseconds of math). When
-    // the census holds at most `spark.graft.bpe.driverMaxTypes` rows
-    // (default 262144; 0 disables), collect it once and run the
-    // IDENTICAL loop locally ([[trainTableFromCounts]] — same argmax,
-    // same cpCompare tie-break, same early stop; BpeSpec pins the two
-    // merge-for-merge). Adversarially diverse text (web garbage, code
-    // identifiers) blows past the cap and keeps the distributed loop.
-    val cap = spark.conf.getOption("spark.graft.bpe.driverMaxTypes")
-      .map(_.toLong).getOrElse(262144L)
-    val census = docs.select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
-      .where(length(col("w")) <= maxWordLen) // fit's garbage guard
+    graft.ops.DriverTwin.persistCount(typeCensus(docs, textCol, maxWordLen),
+        graft.ops.DriverTwin.MaxBpeTypes) { c =>
+      val counts = c.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      import spark.implicits._
+      trainTableFromCounts(counts, numMerges)
+        .toDF("merge_step", "lhs", "rhs", "merged", "pair_count")
+    }(mergeLoop(_, numMerges))
+  }
+
+  /** (w, cnt): one row per pretoken type, with [[fit]]'s garbage guard. */
+  private def typeCensus(docs: DataFrame, textCol: String, maxWordLen: Int): DataFrame =
+    docs.select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
+      .where(length(col("w")) <= maxWordLen)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-    if (cap > 0) {
-      import graft.ops.TrackedCache.TrackOps
-      val c = census.persistT
-      if (c.count() <= cap) {
-        val counts = c.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        c.unpersist(blocking = false)
-        import spark.implicits._
-        return trainTableFromCounts(counts, numMerges)
-          .toDF("merge_step", "lhs", "rhs", "merged", "pair_count")
-      }
-      // over-cap: the distributed loop below reads the census the
-      // count just materialized
-    }
+
+  /** [[fitDistributedTable]]'s distributed merge loop, whatever the
+    * census size. */
+  private[graft] def fitDistributedLoop(docs: DataFrame, numMerges: Int,
+                                        textCol: String = "text",
+                                        maxWordLen: Int = 256): DataFrame =
+    mergeLoop(typeCensus(docs, textCol, maxWordLen), numMerges)
+
+  private def mergeLoop(census: DataFrame, numMerges: Int): DataFrame = {
+    val spark = census.sparkSession
     val chain = graft.ops.Lineage.newChain("bpefit")
     try {
       var vocab = graft.ops.Lineage.cut(

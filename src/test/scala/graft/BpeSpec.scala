@@ -56,18 +56,12 @@ class BpeSpec extends SparkSpec {
       .grouped(7).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    def table() = Bpe.fitDistributedTable(docs, numMerges = 3)
-      .orderBy("merge_step").collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("merge_step").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
-    val gated = table() // default cap: the tiny census trips the gate
-    spark.conf.set("spark.graft.bpe.driverMaxTypes", "0") // distributed loop
-    val distributed = try table()
-    finally spark.conf.unset("spark.graft.bpe.driverMaxTypes")
-    gated shouldBe distributed
-    // a cap below the census size must also route to the distributed loop
-    spark.conf.set("spark.graft.bpe.driverMaxTypes", "2")
-    try table() shouldBe distributed
-    finally spark.conf.unset("spark.graft.bpe.driverMaxTypes")
+    // the tiny census trips the gate: the driver twin runs
+    val gated = rows(Bpe.fitDistributedTable(docs, numMerges = 3))
+    gated shouldBe rows(Bpe.fitDistributedLoop(docs, numMerges = 3))
+    gated.length shouldBe 3
   }
 
   test("supplementary-plane symbols: code-point split and code-point tie-break") {

@@ -266,13 +266,52 @@ class DedupSpec extends SparkSpec {
     val chain = (1L until 40L).map(i => (i, i + 1))
     val pairs = (chain ++ Seq((100L, 101L), (101L, 102L), (100L, 102L)))
       .toDF("doc_a", "doc_b")
-    val dist = Dedup.nearDupClusters(pairs, driverMaxPairs = 0L)
+    val dist = Dedup.nearDupClustersDistributed(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val drv = Dedup.nearDupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     dist shouldBe drv
     dist(40L) shouldBe 1L
     dist(102L) shouldBe 100L
+  }
+
+  test("nearDupClusters driver path: Spark job count pinned (pair count + union-find collect)") {
+    // the benchmarked dedup.cluster stage takes this path on every
+    // pass: the pair count, then the union-find collect, as AQE splits
+    // them into jobs (4) — any added pass changes the number
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val group = s"neardup-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "nearDupClusters job count")
+      try Dedup.nearDupClusters(pairs) finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get shouldBe 4
+  }
+
+  test("minhashCandidatePairs skips rows whose signature is null") {
+    val sigs = Dedup.minhashSignatures(docsDF(
+      1L -> "alpha beta gamma delta epsilon zeta",
+      2L -> "alpha beta gamma delta epsilon zeta",
+      3L -> "one two three four five six"), k = 8)
+    // two null-signature rows land in the same band buckets, so the
+    // in-bucket pair loop would meet them together
+    val dirty = sigs.unionByName(
+      Seq[(Long, Array[Long])]((4L, null), (5L, null)).toDF("doc_id", "sig"))
+    def pairsOf(s: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashCandidatePairs(s, bands = 2, rowsPerBand = 4, minEst = 0.0)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val clean = pairsOf(sigs)
+    clean should contain ((1L, 2L, 1.0))
+    pairsOf(dirty) shouldBe clean
   }
 
   test("dedupByClusters keeps survivors and untouched docs") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
@@ -305,81 +306,57 @@ class GraphSpec extends SparkSpec {
   test("driver twin ≡ distributed loop, bit-exact, for pageRank/hits/LPA (r16 gate)") {
     // pseudo-random-ish graph, deterministic: 40 int nodes, ~300 edges
     // incl. parallel-free aggregated weights, dangling nodes (36..39
-    // have no out-edges), an isolated node (39)
+    // have no out-edges), an isolated node (39). Every public operator
+    // takes its driver twin on a graph this small; each `*Distributed`
+    // body is the loop it replaces.
     val nodes = (0 until 40).toSeq
     val edges = (for (i <- 0 until 36; j <- 0 until 40
                       if i != j && (i * 7 + j * 13) % 5 == 0)
       yield (i, j, ((i * 31 + j * 17) % 9 + 1).toLong)).toSeq
-    def withGate[T](on: Boolean)(body: => T): T = {
-      val key = "spark.graft.graph.driverMaxNodes"
-      spark.conf.set(key, if (on) "1024" else "0")
-      try body finally spark.conf.unset(key)
-    }
-    def prOf(on: Boolean) = withGate(on) {
-      Graph.pageRank(edges.toDF("src", "dst", "w"), nodes.toDF("node"), iters = 3)
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    }
-    def hitsOf(on: Boolean) = withGate(on) {
-      Graph.hits(edges.toDF("src", "dst", "w"), nodes.toDF("node"), iters = 2)
-        .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    }
-    def lpaOf(on: Boolean) = withGate(on) {
-      Graph.labelPropagation(edges.toDF("src", "dst", "w"), nodes.toDF("node"), 4)
-        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    }
-    def withEdgeGate[T](on: Boolean)(body: => T): T = {
-      val key = "spark.graft.graph.driverMaxEdges"
-      spark.conf.set(key, if (on) "500000" else "0")
-      try body finally spark.conf.unset(key)
-    }
+    val (e, n) = (edges.toDF("src", "dst", "w"), nodes.toDF("node"))
+    def prOf(df: DataFrame) = df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    prOf(Graph.pageRank(e, n, iters = 3)) shouldBe      // EXACT double equality
+      prOf(Graph.pageRankDistributed(e, n, iters = 3))
+    def hitsOf(df: DataFrame) =
+      df.collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    hitsOf(Graph.hits(e, n, iters = 2)) shouldBe hitsOf(Graph.hitsDistributed(e, n, iters = 2))
+    def lpaOf(df: DataFrame) = df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    lpaOf(Graph.labelPropagation(e, n, 4)) shouldBe
+      lpaOf(Graph.labelPropagationDistributed(e, n, 4))
     val und = edges.map { case (a, b, _) => (math.min(a, b), math.max(a, b)) }
-      .distinct.filter(t => t._1 != t._2)
-    def kcoreOf(on: Boolean) = withEdgeGate(on) {
-      Graph.kCore(und.toDF("a", "b"), k = 3)
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    }
-    def bfsOf(on: Boolean) = withEdgeGate(on) {
-      Graph.bfs(und.toDF("a", "b"), Seq(0, 39).toDF("node"), maxHops = 3)
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toMap
-    }
-    prOf(true) shouldBe prOf(false)     // EXACT double equality
-    hitsOf(true) shouldBe hitsOf(false)
-    lpaOf(true) shouldBe lpaOf(false)
-    kcoreOf(true) shouldBe kcoreOf(false)
-    bfsOf(true) shouldBe bfsOf(false)
-    def triOf(on: Boolean) = withEdgeGate(on) {
-      Graph.triangleStats(edges.toDF("src", "dst", "w").drop("w"))
-        .collect()(0).toSeq
-    }
-    triOf(true) shouldBe triOf(false)
+      .distinct.filter(t => t._1 != t._2).toDF("a", "b")
+    def kcoreOf(df: DataFrame) = df.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    kcoreOf(Graph.kCore(und, k = 3)) shouldBe kcoreOf(Graph.kCoreDistributed(und, k = 3))
+    val seeds = Seq(0, 39).toDF("node")
+    def bfsOf(df: DataFrame) = df.collect().map(r => (r.getInt(0), r.getInt(1))).toMap
+    bfsOf(Graph.bfs(und, seeds, maxHops = 3)) shouldBe
+      bfsOf(Graph.bfsDistributed(und, seeds, maxHops = 3))
+    val srcDst = e.drop("w")
+    Graph.triangleStats(srcDst).collect()(0).toSeq shouldBe
+      Graph.triangleStatsDistributed(srcDst).collect()(0).toSeq
     // string node ids take the UTF8-binary fold order path
-    val sNodes = (0 until 12).map(i => s"s$i")
+    val sNodes = (0 until 12).map(i => s"s$i").toDF("node")
     val sEdges = (for (i <- 0 until 12; j <- 0 until 12
                        if i != j && (i + j) % 3 == 0)
-      yield (s"s$i", s"s$j", (i + j + 1).toLong)).toSeq
-    def sprOf(on: Boolean) = withGate(on) {
-      Graph.pageRank(sEdges.toDF("src", "dst", "w"), sNodes.toDF("node"), 3)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
-    def slpaOf(on: Boolean) = withGate(on) {
-      Graph.labelPropagation(sEdges.toDF("src", "dst", "w"), sNodes.toDF("node"), 3)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    }
-    sprOf(true) shouldBe sprOf(false)
-    slpaOf(true) shouldBe slpaOf(false)
+      yield (s"s$i", s"s$j", (i + j + 1).toLong)).toSeq.toDF("src", "dst", "w")
+    def sprOf(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    sprOf(Graph.pageRank(sEdges, sNodes, 3)) shouldBe
+      sprOf(Graph.pageRankDistributed(sEdges, sNodes, 3))
+    def slpaOf(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    slpaOf(Graph.labelPropagation(sEdges, sNodes, 3)) shouldBe
+      slpaOf(Graph.labelPropagationDistributed(sEdges, sNodes, 3))
     // modularity twin (r16): exact doubles, incl. unlabeled-endpoint
     // edges (dropped by the inner join on both paths) and an empty graph
-    def modTwin(on: Boolean, lbls: Seq[(Int, Int)], es: Seq[(Int, Int, Long)]) =
-      withEdgeGate(on) {
-        Graph.modularity(es.toDF("src", "dst", "w"),
-          lbls.toDF("node", "community")).collect()(0).toSeq
-      }
+    def modTwin(lbls: Seq[(Int, Int)], es: Seq[(Int, Int, Long)]) = {
+      val (me, ml) = (es.toDF("src", "dst", "w"), lbls.toDF("node", "community"))
+      Graph.modularity(me, ml).collect()(0).toSeq shouldBe
+        Graph.modularityDistributed(me, ml).collect()(0).toSeq
+    }
     val full = nodes.map(n => (n, n % 3))
     val partial = nodes.filter(_ % 4 != 0).map(n => (n, n % 3))
-    modTwin(on = true, full, edges) shouldBe modTwin(on = false, full, edges)
-    modTwin(on = true, partial, edges) shouldBe modTwin(on = false, partial, edges)
-    modTwin(on = true, full, Seq.empty[(Int, Int, Long)]) shouldBe
-      modTwin(on = false, full, Seq.empty[(Int, Int, Long)])
+    modTwin(full, edges)
+    modTwin(partial, edges)
+    modTwin(full, Seq.empty[(Int, Int, Long)])
   }
 
   test("modularity: exact hand-checked value on the two-triangle dumbbell") {

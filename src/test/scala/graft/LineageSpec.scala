@@ -55,17 +55,17 @@ class LineageSpec extends SparkSpec {
 
   test("nearDupClusters distributed path: reliable == local, cluster for cluster") {
     import graft.dedup.Dedup
-    // chain + triangle + isolated pair; driverMaxPairs=0 forces the
-    // distributed label-propagation path both times
+    // chain + triangle + isolated pair, through the distributed
+    // label-propagation path both times
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)).toDF("doc_a", "doc_b")
     val local = withMode("local") {
-      Dedup.nearDupClusters(pairs, driverMaxPairs = 0L).orderBy("doc_id").collect()
+      Dedup.nearDupClustersDistributed(pairs).orderBy("doc_id").collect()
     }
     val reliable = withMode("reliable") {
-      Dedup.nearDupClusters(pairs, driverMaxPairs = 0L).orderBy("doc_id").collect()
+      Dedup.nearDupClustersDistributed(pairs).orderBy("doc_id").collect()
     }
     reliable shouldBe local
     local.map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe Map(
@@ -103,39 +103,29 @@ class LineageSpec extends SparkSpec {
   }
   test("bfs in reliable mode with pruning on: multi-chain cuts never delete live checkpoints (ADVICE r10)") {
     withMode("reliable") {
-      // force the DISTRIBUTED loop (this test exists to exercise the
-      // cut chains; the r16 driver twin would bypass them)
-      spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-      try {
-        // a 5-hop chain forces >= 4 rounds, each reading the previous
-        // round's frontier AND visited checkpoints — the pre-fix shared
-        // prune slot deleted them mid-loop (FileNotFoundException)
-        val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
-        val out = graft.ops.Graph.bfs(edges, Seq(1L).toDF("node"), maxHops = 5)
-          .orderBy("node").collect().map(r => (r.getLong(0), r.getInt(1)))
-        out shouldBe Array((1L, 0), (2L, 1), (3L, 2), (4L, 3), (5L, 4), (6L, 5))
-      } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+      // the DISTRIBUTED loop (this test exists to exercise the cut
+      // chains; the r16 driver twin would bypass them). A 5-hop chain
+      // forces >= 4 rounds, each reading the previous round's frontier
+      // AND visited checkpoints — the pre-fix shared prune slot deleted
+      // them mid-loop (FileNotFoundException)
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
+      val out = graft.ops.Graph.bfsDistributed(edges, Seq(1L).toDF("node"), maxHops = 5)
+        .orderBy("node").collect().map(r => (r.getLong(0), r.getInt(1)))
+      out shouldBe Array((1L, 0), (2L, 1), (3L, 2), (4L, 3), (5L, 4), (6L, 5))
     }
   }
 
   test("back-to-back reliable loops: a retained result survives a later loop's cuts") {
     withMode("reliable") {
-      // force the DISTRIBUTED loops (chain behavior is the subject)
-      spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-      spark.conf.set("spark.graft.graph.driverMaxNodes", "0")
-      try {
-        val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b")
-        val core = graft.ops.Graph.kCore(tri, k = 2) // the triangle survives
-        core.count() shouldBe 3L
-        // a second iterative loop (its own chain) must not prune the
-        // retained frame's final checkpoint
-        graft.ops.Graph.labelPropagation(
-          Seq((1L, 2L, 1L)).toDF("src", "dst", "w"), Seq(1L, 2L).toDF("node"), 3).collect()
-        core.count() shouldBe 3L // re-reads the checkpoint files
-      } finally {
-        spark.conf.unset("spark.graft.graph.driverMaxEdges")
-        spark.conf.unset("spark.graft.graph.driverMaxNodes")
-      }
+      // the DISTRIBUTED loops (chain behavior is the subject)
+      val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b")
+      val core = graft.ops.Graph.kCoreDistributed(tri, k = 2) // the triangle survives
+      core.count() shouldBe 3L
+      // a second iterative loop (its own chain) must not prune the
+      // retained frame's final checkpoint
+      graft.ops.Graph.labelPropagationDistributed(
+        Seq((1L, 2L, 1L)).toDF("src", "dst", "w"), Seq(1L, 2L).toDF("node"), 3).collect()
+      core.count() shouldBe 3L // re-reads the checkpoint files
     }
   }
 }

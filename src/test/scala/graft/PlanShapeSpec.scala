@@ -71,20 +71,18 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     fileScans.map(_.toString).filter(_.contains("lineitem")) shouldBe empty
     planString(df) should include("LocalTableScan")
-    // the DISTRIBUTED loop (gate disabled) keeps the r13 contract:
-    // final frame rides the persisted iteration chain (cache reads,
-    // no lineitem re-scan), dims broadcast into the edge build
-    spark.conf.set("spark.graft.graph.driverMaxNodes", "0")
-    try {
-      val dd = SparkEntry.queries("q117_trade_pagerank")(spark, sf0001)
-      dd.collect()
-      val dplan = dd.queryExecution.executedPlan
-      planString(dd) should include("InMemoryTableScan")
-      collect(dplan) {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.map(_.toString).filter(_.contains("lineitem")) shouldBe empty
-      planString(dd) should include("BroadcastHashJoin")
-    } finally spark.conf.unset("spark.graft.graph.driverMaxNodes")
+    // the DISTRIBUTED loop keeps the r13 contract: final frame rides
+    // the persisted iteration chain (cache reads, no lineitem re-scan),
+    // dims broadcast into the edge build
+    val dd = graft.queries.ExtendedCoreQueries.q117With(spark, sf0001,
+      graft.ops.Graph.pageRankDistributed(_, _, _))
+    dd.collect()
+    val dplan = dd.queryExecution.executedPlan
+    planString(dd) should include("InMemoryTableScan")
+    collect(dplan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.map(_.toString).filter(_.contains("lineitem")) shouldBe empty
+    planString(dd) should include("BroadcastHashJoin")
   }
 
   test("q120 session co-occurrence: ONE user-keyed window shuffle; pair expansion is a narrow transform") {

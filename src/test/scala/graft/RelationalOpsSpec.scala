@@ -357,17 +357,14 @@ class RelationalOpsSpec extends SparkSpec {
     val order = Seq(col("k").desc, col("v").asc)
     def asMap(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    val distributed = asMap(RelationalOps.globalRowNumber(df, order))
-    // gate TRIPS: knownRows = exact count, below the default cap
+    val distributed = asMap(RelationalOps.globalRowNumberDistributed(df, order))
+    // without knownRows the public operator takes the distributed path
+    asMap(RelationalOps.globalRowNumber(df, order)) shouldBe distributed
+    // gate TRIPS: knownRows = exact count, below the cap
     asMap(RelationalOps.globalRowNumber(df, order, knownRows = 6L)) shouldBe distributed
-    // gate DISABLED by conf: same answer via the distributed path
-    spark.conf.set("spark.graft.rownum.driverMaxRows", "0")
-    try asMap(RelationalOps.globalRowNumber(df, order, knownRows = 6L)) shouldBe distributed
-    finally spark.conf.unset("spark.graft.rownum.driverMaxRows")
-    // gate NOT tripped when the count exceeds the cap
-    spark.conf.set("spark.graft.rownum.driverMaxRows", "3")
-    try asMap(RelationalOps.globalRowNumber(df, order, knownRows = 6L)) shouldBe distributed
-    finally spark.conf.unset("spark.graft.rownum.driverMaxRows")
+    // the distributed path over few range partitions agrees too
+    asMap(RelationalOps.globalRowNumberDistributed(df, order, partitions = 2)) shouldBe
+      distributed
     // gated path on an empty frame: no rows, no failure
     RelationalOps.globalRowNumber(df.limit(0), order, knownRows = 0L).count() shouldBe 0L
   }

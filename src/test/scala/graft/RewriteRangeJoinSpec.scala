@@ -76,19 +76,6 @@ class RewriteRangeJoinSpec extends SparkSpec {
     }
   }
 
-  test("gate: spark.graft.rewriteRangeJoin=false restores the nested loop") {
-    val a = events.select(col("event_id").as("a_id"), col("ms").as("a_ms"))
-    val b = events.select(col("event_id").as("b_id"), col("ms").as("b_ms"))
-    spark.conf.set("spark.graft.rewriteRangeJoin", "false")
-    try {
-      val plan = a.join(b, abs(col("a_ms") - col("b_ms")) <= lit(60000L))
-        .queryExecution.executedPlan.toString
-      withClue(plan) {
-        plan.contains("NestedLoop") shouldBe true
-      }
-    } finally spark.conf.unset("spark.graft.rewriteRangeJoin")
-  }
-
   test("null timestamps never match, as in the raw theta join") {
     import spark.implicits._
     val x = Seq((1L, Some(1000L)), (2L, None)).toDF("a_id", "a_ms")

@@ -4,6 +4,11 @@
 #
 #   tools/precommit.sh [q1_name,q2_name,...]
 #
+# 0. Settings guard: src/main may name only the two user-settable
+#    `spark.graft.*` keys — the lineage durability mode and the
+#    per-session MV rewrite switch. Path choices (driver twin vs
+#    distributed loop) are constants in graft.ops.DriverTwin, never
+#    settings.
 # 1. `sbt compile` — the r10 failure mode (an uncompiled final commit)
 #    becomes impossible.
 # 2. If query names are given (anything touched since the last full
@@ -14,6 +19,13 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 QS="${1:-}"
+BAD_KEYS=$(git grep --untracked -ohE 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' -- src/main \
+  | sort -u | grep -vxE 'spark\.graft\.(lineage\.cut|mvRewrite)' || true)
+if [ -n "$BAD_KEYS" ]; then
+  echo "PRECOMMIT FAIL: spark.graft.* keys outside the allowed two:"
+  echo "$BAD_KEYS"
+  exit 1
+fi
 # Test/compile: main AND test sources must compile (ADVICE r11 — a
 # break in a spec would otherwise pass the gate)
 sbt -batch Test/compile
