@@ -2450,7 +2450,7 @@ object AdvSweep {
     // ---- q286 incremental scrub: empty shard / empty standing corpus ----
     // The routine empty-partition-day postures, plus the batch-internal
     // branch: with an EMPTY standing index, two identical batch docs
-    // must still scrub (nd_b >= 2 path — the union semantics don't need
+    // must still scrub (min_b < max_b path — the union semantics don't need
     // the corpus to hold the template), lower doc_id keeping its copy.
     step("incremental_scrub_edge_sides") {
       val txt = (0 until 12).map(i => s"iw$i").mkString(" ")

@@ -76,6 +76,38 @@ private[dedup] final class ProbePairStream(
   override def next(): (Long, Long, Double) = { fill(); out.removeHead() }
 }
 
+/** Streaming span-scrub OWNER pass over a (gram, doc_id)-sorted
+  * partition iterator — the [[Dedup.spanScrub]] kernel shape: rows are
+  * (gram, doc_id, pos) hash-partitioned by gram and sorted within the
+  * partition, so each gram's occurrences arrive consecutively with the
+  * MINIMUM doc_id — the owner — first. Every occurrence held by a later
+  * doc emits its (doc_id, pos) window start; the owner's own rows
+  * (repeats included) never do, so a gram held by one doc emits
+  * nothing and no ≥ 2-docs census is needed. Memory is O(1), no cap. */
+private[graft] final class SpanOwnerStream(rows: Iterator[(String, Long, Int)])
+  extends Iterator[(Long, Int)] {
+
+  private var curGram: String = null
+  private var owner = 0L
+  private var pending: (Long, Int) = null
+
+  private def fill(): Unit =
+    while (pending == null && rows.hasNext) {
+      val (gram, id, pos) = rows.next()
+      if (curGram == null || gram != curGram) { curGram = gram; owner = id }
+      else if (id != owner) pending = (id, pos)
+    }
+
+  override def hasNext: Boolean = { fill(); pending != null }
+  override def next(): (Long, Int) = {
+    fill()
+    if (pending == null) throw new NoSuchElementException("SpanOwnerStream exhausted")
+    val out = pending
+    pending = null
+    out
+  }
+}
+
 /** Streaming capped member-set pair emitter over a (key, member)-sorted
   * partition iterator (r17) — the breadth-capped affinity shape (q290):
   * rows are (gram, member, occ) hash-partitioned by gram and sorted

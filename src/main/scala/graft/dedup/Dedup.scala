@@ -187,8 +187,8 @@ object Dedup {
       // feeds the duplicated-gram aggregate AND the per-doc stats join
       .persistT
     val dup = g.groupBy("gh")
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2).select("gh")
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .where(col("lo") < col("hi")).select("gh")
     val perDoc = g.join(dup, Seq("gh"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_positions"))
     docs.select(col("doc_id"),
@@ -351,8 +351,8 @@ object Dedup {
       .persistT
     val exploded = withChunks.select(col("doc_id"), posexplode(col("ch")).as(Seq("pos", "gh")))
     val dup = exploded.groupBy("gh")
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2).select("gh")
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .where(col("lo") < col("hi")).select("gh")
     val dupPos = exploded.join(dup, Seq("gh"))
       .groupBy("doc_id").agg(collect_set(col("pos")).as("dup_pos"))
     val keptIdx = filter(sequence(lit(0), size(col("ch")) - 1),
@@ -445,25 +445,25 @@ object Dedup {
       org.apache.spark.sql.GraftSqlShim.expression(col("sig_a")),
       org.apache.spark.sql.GraftSqlShim.expression(col("sig_b")), k))
 
-  /** Banding projection shared by the self-join and between-table
-    * candidate generators: one (doc_id, band, bh) row per band. */
-  private[graft] def bandedOf(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandArr = transform(sequence(lit(0), lit(bands - 1)),
+  /** Per-band hashes of the `sig` column: band b hashes "b:" followed
+    * by its `rowsPerBand` signature values joined by commas. */
+  private def bandHashes(bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
       b => graft.text.Hashing.h60(concat_ws(":", b.cast("string"),
         array_join(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>"), ","))))
-    sigs.select(col("doc_id"), posexplode(bandArr).as(Seq("band", "bh")))
-  }
+
+  /** Banding projection shared by the self-join and between-table
+    * candidate generators: one (doc_id, band, bh) row per band. */
+  private[graft] def bandedOf(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(col("doc_id"), posexplode(bandHashes(bands, rowsPerBand)).as(Seq("band", "bh")))
 
   /** [[bandedOf]] carrying the signature column through the explode —
     * the in-bucket verification's input (r16). Column pruning keeps
     * consumers that only read (band, bh, doc_id) as narrow as the
     * plain projection. */
-  private[graft] def bandedWideOf(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandArr = transform(sequence(lit(0), lit(bands - 1)),
-      b => graft.text.Hashing.h60(concat_ws(":", b.cast("string"),
-        array_join(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>"), ","))))
-    sigs.select(col("doc_id"), col("sig"), posexplode(bandArr).as(Seq("band", "bh")))
-  }
+  private[graft] def bandedWideOf(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(col("doc_id"), col("sig"),
+      posexplode(bandHashes(bands, rowsPerBand)).as(Seq("band", "bh")))
 
   /** Candidate pairs BETWEEN two signature tables — the probe shape of
     * incremental dedup: `sigsA` is the arriving batch, `sigsB` the
@@ -714,70 +714,97 @@ object Dedup {
     * kept tokens — the full rewrite semantics hashed without shipping
     * the scrubbed text anywhere.
     *
-    * Scale shape: gram census + owner min (one shuffle), covering
-    * positions explode ≤ L per seed, and ONE doc-grain rollup that
-    * rebuilds each kept sequence via array_sort(collect_list) —
-    * RESTRICTED by a left-semi join to the scrubbed docs first, so at
-    * 100 TB with ~1% of docs affected, ~99% of the corpus's tokens
-    * never enter the rollup shuffle; the per-doc buffer is bounded by
-    * document length, the bound any rewrite of an affected doc pays. */
+    * Scale shape: the tokenize + L-window md5 projection stays in the
+    * scan stage; the (gram, doc_id, pos) rows then ride ONE hash
+    * exchange on gram, sorted within the partition by (gram, doc_id),
+    * and [[SpanOwnerStream]] emits every non-owner window start in one
+    * pass (O(1) memory, no cap; a gram held by one doc emits nothing,
+    * so no ≥ 2-docs census is needed). The starts — a few ints per
+    * AFFECTED doc — fold into one doc-keyed collect_list, inner-join
+    * the tokenized docs and rewrite each doc in one row
+    * ([[scrubRewrite]]): unscrubbed docs drop at the join, and the
+    * per-doc work is bounded by document length.
+    * Skew: every occurrence of a hot window lands on one task — the
+    * same bound the sort-merge gram join this pass replaced paid, so
+    * no input skews it worse. No persist and no eager job: the result
+    * is one lazy plan. */
   def spanScrub(docs: DataFrame, minLen: Int): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2: $minLen")
+    import docs.sparkSession.implicits._
     val L = minLen
     // narrow-input guard (r16): the L-window md5 transform below is
-    // the expensive projection — spread a single-split scan core-wide
+    // the expensive projection — spread a single-split scan core-wide.
+    // Only docs of ≥ L tokens can hold a window, and the doc_id guard
+    // is the one the rewrite's inner join infers: with both filters
+    // here, the window pass and the rewrite read the SAME subtree and
+    // share one scan + spread exchange.
     val toked = graft.ops.RelationalOps.spreadNarrowInput(
-      docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts")),
+      docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts"))
+        .where(size(col("ts")) >= L && col("doc_id").isNotNull),
       Seq(col("doc_id")))
-    val toks = toked.select(col("doc_id"), posexplode(col("ts")))
-      .toDF("doc_id", "pos", "tok")
-    val grams = toked.where(size(col("ts")) >= L)
-      .select(col("doc_id"), posexplode(transform(
+    val starts = toked
+      .select(col("doc_id").cast("long").as("doc_id"), posexplode(transform(
         sequence(lit(0), size(col("ts")) - L),
         i => md5(array_join(slice(col("ts"), i + 1, lit(L)), " ")))))
-      .toDF("doc_id", "pos", "gram")
-    val owners = grams.groupBy(col("gram"))
-      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-      .where(col("nd") >= 2).select(col("gram"), col("owner"))
-    val removed = grams.join(owners, Seq("gram"))
-      .where(col("doc_id") =!= col("owner"))
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + L - 1)).as("pos"))
-      .distinct()
-      .persistT // consumed twice: the doc-prune semi-join and the position mark
-    // materialize EAGERLY (r17, the advisor-family lesson): both
-    // consumers fire in ONE action — left lazy, their stages race to
-    // fill the cache and the grams+census+join chain computes twice
-    removed.count()
-    scrubRollup(toks, removed)
+      .select(col("col").as("gram"), col("doc_id"), col("pos"))
+      .repartition(col("gram"))
+      .sortWithinPartitions(col("gram"), col("doc_id"))
+      .as[(String, Long, Int)]
+      .mapPartitions(it => new SpanOwnerStream(it))
+      .toDF("doc_id", "pos")
+    scrubRewrite(toked, starts, L)
+  }
+
+  /** One scrubbed doc's report (the [[spanScrub]] output columns after
+    * doc_id). */
+  private[graft] final case class Scrubbed(n_tokens: Long, n_removed: Long,
+                                           kept_ppm: Long, scrubbed_hash: String)
+
+  /** Rewrite one doc: remove every position in [p, p + L) for each
+    * window start p (overlaps and repeats allowed; every start is a
+    * window of the doc, so the doc is non-empty), then report the
+    * token count, the removed count, the kept share in ppm and the md5
+    * hex of the kept tokens joined by single spaces — Spark's
+    * `md5(array_join(kept, " "))`, null tokens skipped as array_join
+    * skips them. O(tokens + starts). */
+  private[graft] def rewriteDoc(ts: Seq[String], starts: Seq[Int], L: Int): Scrubbed = {
+    val n = ts.length
+    val reach = new Array[Int](n) // furthest window end starting at i
+    starts.foreach(p => reach(p) = math.max(reach(p), p + L))
+    val kept = new java.lang.StringBuilder()
+    var first = true
+    var covered = 0
+    var removed = 0L
+    var i = 0
+    while (i < n) {
+      covered = math.max(covered, reach(i))
+      if (i < covered) removed += 1
+      else if (ts(i) != null) {
+        if (!first) kept.append(' ')
+        kept.append(ts(i)); first = false
+      }
+      i += 1
+    }
+    Scrubbed(n, removed, (n - removed) * 1000000L / n,
+      org.apache.commons.codec.digest.DigestUtils.md5Hex(kept.toString))
   }
 
   /** The doc-grain rewrite shared by [[spanScrub]] and
-    * [[GramIndex.scrubProbe]]: given the token table (doc_id, pos, tok)
-    * and the distinct removed positions (doc_id, pos), rebuild each
-    * AFFECTED doc's kept sequence and report (doc_id, n_tokens,
-    * n_removed, kept_ppm, scrubbed_hash).
-    *
-    * Prunes BEFORE the rollup (VERDICT r12 #2): `removed` already names
-    * exactly the affected docs, so a left-semi join restricts the
-    * collect_list rebuild to them — without it every UNscrubbed doc's
-    * tokens would shuffle into a per-doc sort only to be discarded by
-    * the n_removed > 0 filter (~99% of the corpus at a 1% scrub rate).
-    * `removed` must be persisted by the caller (consumed twice here). */
-  private[dedup] def scrubRollup(toks: DataFrame, removed: DataFrame): DataFrame =
-    toks.join(removed.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .join(removed.withColumn("rm", lit(1)), Seq("doc_id", "pos"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("rm").isNotNull, 1L).otherwise(0L)).as("n_removed"),
-        md5(array_join(transform(
-            array_sort(collect_list(when(col("rm").isNull,
-              struct(col("pos"), col("tok"))))),
-            x => x.getField("tok")), " ").cast("binary")).as("scrubbed_hash"))
-      .where(col("n_removed") > 0)
-      .withColumn("kept_ppm", expr("(n_tokens - n_removed) * 1000000 div n_tokens"))
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        col("kept_ppm"), col("scrubbed_hash"))
+    * [[GramIndex.scrubProbe]]: `toked` is (doc_id, ts: token array),
+    * `starts` the removed window starts (doc_id, pos) — each window
+    * covers [pos, pos + L). One doc-keyed collect_list folds the starts
+    * of the AFFECTED docs only, an inner join attaches their token
+    * arrays, and [[rewriteDoc]] reports (doc_id, n_tokens, n_removed,
+    * kept_ppm, scrubbed_hash) per affected doc. Unscrubbed docs never
+    * enter the join's output, and at a 1 % scrub rate the starts side
+    * is small enough for AQE to broadcast. */
+  private[dedup] def scrubRewrite(toked: DataFrame, starts: DataFrame, L: Int): DataFrame = {
+    val rewrite = udf((ts: Seq[String], st: Seq[Int]) => rewriteDoc(ts, st, L))
+    toked.join(starts.groupBy(col("doc_id")).agg(collect_list(col("pos")).as("starts")),
+        Seq("doc_id"))
+      .select(col("doc_id"), rewrite(col("ts"), col("starts")).as("r"))
+      .select(col("doc_id"), col("r.*"))
+  }
 
   /** Incremental twin of [[dupSpans]]: maximal ≥ `minLen`-token spans
     * in `batch` documents that already exist VERBATIM anywhere in
@@ -859,8 +886,8 @@ object Dedup {
       .toDF("doc_id", "pos", "gram")
       .persistT
     val dup = grams.groupBy(col("gram"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2).select(col("gram"))
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .where(col("lo") < col("hi")).select(col("gram"))
     val spans = grams.join(dup, Seq("gram"))
       .withColumn("grp", col("pos") - row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -905,8 +932,8 @@ object Dedup {
       .toDF("min_len", "doc_id", "pos", "gram")
       .persistT
     val dup = grams.groupBy(col("min_len"), col("gram"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2).select("min_len", "gram")
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .where(col("lo") < col("hi")).select("min_len", "gram")
     grams.join(dup, Seq("min_len", "gram"))
       .withColumn("grp", col("pos") - row_number().over(
         org.apache.spark.sql.expressions.Window

@@ -843,33 +843,32 @@ object GramIndex {
     * bucket-layout semi-restriction followed by a min-merge (append-
     * safe: duplicate gram rows across segments collapse to the true
     * minimum), so index-side cost is the matched rows, never the
-    * corpus; the rollup is [[Dedup.scrubRollup]], pruned to affected
-    * docs. */
+    * corpus; the removed window starts feed the doc-grain rewrite
+    * [[Dedup.scrubRewrite]], which touches affected docs only. */
   def scrubProbe(spark: SparkSession, batch: DataFrame,
                  name: String, spec: Spec = Spec()): DataFrame = {
     val L = spec.minLen
     val toked = batch
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts"))
-    val toks = toked.select(col("doc_id"), posexplode(col("ts")))
-      .toDF("doc_id", "pos", "tok")
-    // consumed twice (census + removal explode): persist, or the
+    // consumed twice (census + window-start join): persist, or the
     // batch's md5 windowing re-executes per consumer
     val grams = gramsOf(batch, L).persistT
-    val batchCensus = grams.groupBy(col("gram"))
-      .agg(countDistinct(col("doc_id")).as("nd_b"), min(col("doc_id")).as("min_b"))
-    val owned = unionOwned(spark, name, "scrubProbe", batchCensus)
-    val removed = grams.join(owned, Seq("gram"))
+    val starts = grams.join(unionOwned(spark, name, "scrubProbe", batchCensus(grams)), Seq("gram"))
       .where(col("doc_id") =!= col("owner"))
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + L - 1)).as("pos"))
-      .distinct()
-      .persistT // consumed twice inside the rollup (doc prune + mark)
-    Dedup.scrubRollup(toks, removed)
+      .select(col("doc_id"), col("pos"))
+    Dedup.scrubRewrite(toked, starts, L)
   }
+
+  /** The batch-side (gram, min_b, max_b) census [[unionOwned]] reads:
+    * min_b < max_b iff ≥ 2 batch docs hold the gram — one
+    * map-side-combinable aggregate, no distinct-count Expand. */
+  private def batchCensus(grams: DataFrame): DataFrame =
+    grams.groupBy(col("gram"))
+      .agg(min(col("doc_id")).as("min_b"), max(col("doc_id")).as("max_b"))
 
   /** UNION-wide ownership of a batch's grams — the shared kernel of
     * [[scrubProbe]] and [[ownerAttribution]]. `batchCensus` is the
-    * batch-side (gram, nd_b, min_b) census; the result is one row per
+    * batch-side (gram, min_b, max_b) census; the result is one row per
     * gram that is duplicated in (corpus ∪ batch) — standing in the
     * corpus, or held by ≥ 2 batch docs — with the union-wide owner
     * (min doc_id across the indexed owners and the batch minimum).
@@ -900,7 +899,7 @@ object GramIndex {
           }
     }
     batchCensus.join(idxOwners, Seq("gram"), "left")
-      .where(col("owner_c").isNotNull || col("nd_b") >= 2)
+      .where(col("owner_c").isNotNull || col("min_b") < col("max_b"))
       .select(col("gram"),
         least(coalesce(col("owner_c"), col("min_b")), col("min_b")).as("owner"))
   }
@@ -1005,10 +1004,8 @@ object GramIndex {
                        name: String, spec: Spec = Spec()): DataFrame = {
     val grams = gramsOf(batch, spec.minLen)
       .select("doc_id", "pos", "gram").persistT // census + foreign join
-    val batchCensus = grams.groupBy(col("gram"))
-      .agg(countDistinct(col("doc_id")).as("nd_b"), min(col("doc_id")).as("min_b"))
     val foreign = grams.join(
-        unionOwned(spark, name, "ownerAttribution", batchCensus), Seq("gram"))
+        unionOwned(spark, name, "ownerAttribution", batchCensus(grams)), Seq("gram"))
       .where(col("doc_id") =!= col("owner"))
       .persistT // per-owner rollup + per-doc total
     val top = foreign.groupBy(col("doc_id"), col("owner"))

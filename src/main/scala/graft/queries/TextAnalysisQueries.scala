@@ -2311,7 +2311,8 @@ object TextAnalysisQueries {
     *
     * Scale shape: shard gram'd and censused (∝ shard); index owners
     * fetched by a bucket-layout semi-restriction (∝ matched rows);
-    * rollup pruned to affected docs ([[graft.dedup.Dedup.scrubRollup]]). */
+    * doc-grain rewrite of affected docs only
+    * ([[graft.dedup.Dedup.scrubRewrite]]). */
   private def q286(s: SparkSession, d: String): DataFrame = {
     val docs = docs0(s, d)
     val spec = graft.dedup.GramIndex.Spec(minLen = 8, buckets = 8)

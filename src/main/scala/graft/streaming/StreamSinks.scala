@@ -165,7 +165,7 @@ object StreamSinks {
     * contains the batch's own grams returns EXACTLY the pre-append
     * scrub — a gram held only by one batch doc arrives owner=itself
     * (kept, unreported), a batch-internal duplicate arrives
-    * owner=min batch holder (same as the nd_b >= 2 path), and a
+    * owner=min batch holder (same as the min_b < max_b path), and a
     * corpus-standing gram min-merges identically (StreamScrubSpec pins
     * probe-after-append ≡ probe-then-append). Replay therefore cannot
     * change results: a crash between append and report commit replays

@@ -10,6 +10,25 @@ class DedupSpec extends SparkSpec {
   private def docsDF(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
+  /** Spark jobs `body` starts, counted by job group. */
+  private def jobsOf(label: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   test("exactGroups: one group per distinct text, min id survives") {
     val df = docsDF(1L -> "hello world", 2L -> "hello world", 3L -> "other")
     val out = Dedup.exactGroups(df).orderBy("keep_id").collect()
@@ -280,21 +299,7 @@ class DedupSpec extends SparkSpec {
     // pass: the pair count, then the union-find collect, as AQE splits
     // them into jobs (4) — any added pass changes the number
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("doc_a", "doc_b")
-    val sc = spark.sparkContext
-    val group = s"neardup-jobs-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "nearDupClusters job count")
-      try Dedup.nearDupClusters(pairs) finally sc.clearJobGroup()
-      org.apache.spark.GraftSparkShim.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get shouldBe 4
+    jobsOf("neardup-jobs") { Dedup.nearDupClusters(pairs) } shouldBe 4
   }
 
   test("minhashCandidatePairs skips rows whose signature is null") {
@@ -513,5 +518,53 @@ class DedupSpec extends SparkSpec {
       .digest("u0 u1 u2 u3 u4".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     d3._5 shouldBe expect
+  }
+
+  test("spanScrub: Spark job count pinned (call + collect)") {
+    // one lazy plan: no persist, no eager count — the jobs are the
+    // collect's AQE stages only; any added pass changes the number
+    val w = (0 until 20).map(i => s"w$i")
+    val df = docsDF(
+      1L -> w.mkString(" "),
+      2L -> w.mkString(" "),
+      3L -> ((0 until 5).map(i => s"u$i") ++ w.take(10)).mkString(" "))
+    jobsOf("spanscrub-jobs") { Dedup.spanScrub(df, minLen = 8).collect() } shouldBe 5
+  }
+
+  test("SpanOwnerStream: empty input and single-holder grams emit nothing") {
+    new graft.dedup.SpanOwnerStream(Iterator.empty).toList shouldBe Nil
+    // one doc holding the gram, even repeatedly, owns every occurrence
+    new graft.dedup.SpanOwnerStream(Iterator(("g", 5L, 0), ("g", 5L, 3), ("g", 5L, 9)))
+      .toList shouldBe Nil
+  }
+
+  test("SpanOwnerStream: owner repeats stay, every non-owner occurrence emits its start") {
+    val rows = Iterator(("g", 1L, 0), ("g", 1L, 4), ("g", 2L, 0), ("g", 2L, 7), ("g", 3L, 2))
+    new graft.dedup.SpanOwnerStream(rows).toList shouldBe List((2L, 0), (2L, 7), (3L, 2))
+  }
+
+  test("SpanOwnerStream: the owner resets between consecutive grams") {
+    // b's owner is 2 (not a's 1); c is held by 3 alone
+    val rows = Iterator(("a", 1L, 0), ("a", 2L, 1), ("b", 2L, 5), ("b", 3L, 6), ("c", 3L, 0))
+    val it = new graft.dedup.SpanOwnerStream(rows)
+    it.toList shouldBe List((2L, 1), (3L, 6))
+    it.hasNext shouldBe false
+  }
+
+  test("rewriteDoc: overlapping and unsorted window starts remove their union once") {
+    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val ts = (0 until 10).map(i => s"t$i")
+    // [4,7) ∪ [2,5) ∪ [4,7) = positions 2..6; the repeat counts once
+    Dedup.rewriteDoc(ts, Seq(4, 2, 4), 3) shouldBe
+      Dedup.Scrubbed(10L, 5L, 500000L, md5hex("t0 t1 t7 t8 t9"))
+    // a window ending at the last token
+    Dedup.rewriteDoc(ts, Seq(7), 3) shouldBe
+      Dedup.Scrubbed(10L, 3L, 700000L, md5hex("t0 t1 t2 t3 t4 t5 t6"))
+  }
+
+  test("rewriteDoc: a fully covered doc keeps nothing and hashes the empty string") {
+    Dedup.rewriteDoc(Seq("a", "b", "c", "d"), Seq(1, 0), 3) shouldBe
+      Dedup.Scrubbed(4L, 4L, 0L, "d41d8cd98f00b204e9800998ecf8427e")
   }
 }

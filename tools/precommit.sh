@@ -34,7 +34,7 @@ if [ -n "$QS" ]; then
   # saveAsTable names (LOCATION_ALREADY_EXISTS) — start clean, as the
   # verify skill mandates for full runs
   rm -rf target/precommit_out spark-warehouse target/indexes
-  SPARK_GRAFT_ONLY="$QS" SPARK_GRAFT_CPUS=8 \
+  SPARK_GRAFT_ONLY="$QS" SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
     sbt -batch "runMain graft.Verify /root/testdata/sf0.01 target/precommit_out"
   python3 tools/check.py /root/testdata/sf0.01 target/precommit_out
   sbt -batch "runMain graft.LintNew $QS"
