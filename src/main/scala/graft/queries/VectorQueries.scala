@@ -141,7 +141,7 @@ object VectorQueries {
   // end, so the oracle replays the identical buckets from the same
   // hyperplane literals and the result matches exactly.
   // Pair-level near-dup output (tiny) keeps the single-pass sortedOut so the
-  // hyperplane-LSH join is executed once (PlanShapeSpec pin).
+  // one-exchange LSH pair kernel is executed once (PlanShapeSpec pin).
   private def q58(s: SparkSession, d: String): DataFrame =
     VectorFunctions.cosineNearDupPairs(emb(s, d), dim = 64, minCos = 0.45)
       .sortedOut("vec_a", "vec_b")

@@ -19,7 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Arithmetic is a sequential left-to-right double fold — bit-identical
   * to the HOF formulation and to the DuckDB oracle, independent of
-  * partitioning.
+  * partitioning. [[CosineSimilarity.of]] is that arithmetic; the
+  * interpreted eval calls it and the generated code is the same loops
+  * (CosineExpressionSpec pins the two bit-equal).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -34,21 +36,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    var na = 0.0
-    i = 0
-    while (i < x.numElements()) { val v = x.getFloat(i).toDouble; na += v * v; i += 1 }
-    var nb = 0.0
-    i = 0
-    while (i < y.numElements()) { val v = y.getFloat(i).toDouble; nb += v * v; i += 1 }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData].toFloatArray(),
+      b.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -76,4 +66,28 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** Cosine of two float vectors: the dot product over the common
+    * prefix and each squared norm over its own array, each a sequential
+    * left-to-right double fold, then `dot / (√na · √nb)`. Symmetric bit
+    * for bit. A zero or NaN vector yields NaN. Shared by the expression's
+    * interpreted eval and the streaming pair kernel
+    * ([[CosinePairStream]]), so the kernel's verification cannot drift
+    * from the codegen path or from the q58 oracle. */
+  def of(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0
+    var i = 0
+    while (i < n) { dot += a(i).toDouble * b(i).toDouble; i += 1 }
+    var na = 0.0
+    i = 0
+    while (i < a.length) { val v = a(i).toDouble; na += v * v; i += 1 }
+    var nb = 0.0
+    i = 0
+    while (i < b.length) { val v = b(i).toDouble; nb += v * v; i += 1 }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * [[graft.dedup.MinHashSignature]]: a dense fixed per-row loop
   * belongs in one fused eval. The banding projection this feeds is the
   * narrow per-row stage of embedding near-dup dedup
-  * ([[VectorFunctions.cosineNearDupPairs]]), so at 100 TB it is pure
-  * map-side work either way — this just makes it ~an order of
-  * magnitude cheaper per row.
+  * ([[VectorFunctions.cosineNearDupPairs]]: buckets and the refinement
+  * `sub` in one projection before its single (tbl, bucket) exchange),
+  * so at 100 TB it is pure map-side work either way — this just makes
+  * it ~an order of magnitude cheaper per row.
   *
   * Bit-identical to the HOF path for WELL-FORMED vectors (exactly dim
   * elements; VectorFunctionsSpec + a scalacheck property pin it, the

@@ -1,10 +1,8 @@
 package graft.sim
 
-import graft.ops.TrackedCache.TrackOps
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Embedding-similarity operators (driver mandate; SURVEY.md §2.11).
   *
@@ -102,87 +100,82 @@ object VectorFunctions {
     * independent hyperplane sets of `planesPerTable` planes each (few
     * planes per table + several tables = the standard recall knob for
     * moderate-cosine matching: recall = 1-(1-p^b)^L); candidates are
-    * vectors sharing a (table, bucket), capped per bucket (skew guard;
-    * over-cap buckets emit star pairs to the bucket-min anchor),
-    * then verified with the exact fused-codegen cosine. The self-join
-    * carries only (table, bucket, vec_id) — never the vectors; no
-    * cross join anywhere.
+    * vectors sharing a (table, bucket), capped per bucket (skew guard),
+    * verified with the exact cosine ([[CosineSimilarity.of]]).
+    *
+    * One pass per row computes every table's bucket
+    * ([[HyperplaneBuckets]]) and a 16-plane refinement `sub`, and
+    * `posexplode` yields one (tbl, bucket, sub, vec_id, embedding) row
+    * per table. Those rows take ONE hash exchange on (tbl, bucket),
+    * sorted within partitions by (tbl, bucket, sub, vec_id), and the
+    * streaming [[CosinePairStream]] verifies each bucket in place:
+    *   - a bucket of ≤ `bucketCap` members emits every pair
+    *     (vec_a < vec_b) with cosine ≥ `minCos`;
+    *   - an over-cap bucket splits into its refinement sub-buckets: a
+    *     `planesPerTable`-plane bucket is COARSE (2^p buckets), so a big
+    *     bucket is usually a heterogeneous accident of corpus size, and
+    *     star pairs to its min id would verify to nothing (the
+    *     adversarial sweep measured a 10k near-identical cluster giving
+    *     0 pairs that way). Only a near-identical cluster survives 16
+    *     more sign agreements in one sub-bucket; an under-cap sub-bucket
+    *     emits all its verified pairs, and a sub-bucket still over the
+    *     cap IS homogeneous content, so it emits star pairs to its
+    *     min-id anchor — O(n) pairs, never a silent drop.
+    * A final `dropDuplicates` over the pairs that passed removes the
+    * copies found in several tables (same pair, same cosine). Memory
+    * per task is O(cap) embeddings. No census, no broadcast gate, no
+    * persist, no self-join and no join back to the vectors.
+    *
+    * Shuffle trade: the exchange ships `tables` copies of every vector,
+    * once. At the curation benchmark's size (4 000 vectors, 8 tables)
+    * that is ~32 k rows, and the call's shuffle grew from 2.2 to 2.4 MB
+    * (compressed) against a formulation that self-joined ids and
+    * broadcast its 0.5 MB embedding table for the join back. At 100 TB
+    * the balance reverses: nothing is broadcastable, and a join back
+    * ships one embedding per candidate pair, twice, with ~60 candidates
+    * per vector at 16 members per bucket — against `tables` (8) copies
+    * here.
+    *
+    * Contract: `vec_id` is unique (a repeated id keeps one cosine per
+    * id pair). Rows with a null `vec_id` are dropped first. A null
+    * vector, or one of any dimension other than `dim`, has no buckets
+    * and drops out; a zero or NaN vector buckets, counts toward its
+    * bucket's cap, and never pairs (its cosine is NaN). A null element
+    * reads as 0, as in [[HyperplaneBuckets]] and [[cosine]].
     */
   def cosineNearDupPairs(embs: DataFrame, dim: Int, minCos: Double,
                          tables: Int = 8, planesPerTable: Int = 4,
                          bucketCap: Int = 1000, seed: Long = 42L): DataFrame = {
-    val lshs = (0 until tables).map(t =>
-      new RandomHyperplaneLsh(dim, planesPerTable, seed = seed + t))
-    // all tables' buckets in ONE fused array pass per row (the builtin
-    // formulation ran tables×planes interpreted HOF dot products per
-    // row — see HyperplaneBuckets; VectorFunctionsSpec pins the two)
-    val signs = lshs.map(_.hyperplanes.map(_.toArray).toArray).toArray
-    val bucketArr = org.apache.spark.sql.GraftSqlShim.column(HyperplaneBuckets(
-      org.apache.spark.sql.GraftSqlShim.expression(col("embedding")), signs))
-    // lazily returned plan ⇒ unpersist is the ContextCleaner's job
-    val e = embs.persistT
-    // Refinement planes for over-cap buckets: a `planesPerTable`-plane
-    // bucket is COARSE (2^p buckets), so a big bucket is usually a
-    // heterogeneous accident of corpus size, not a near-dup cluster —
-    // star pairs to its min-id anchor would be filtered to nothing by
-    // the cosine verify (the adversarial sweep measured exactly that: a
-    // 10k near-identical cluster produced 0 pairs because every bucket
-    // anchor was an unrelated base vector). Instead, over-cap buckets
-    // are RE-BUCKETED by 16 extra deterministic hyperplanes; only a
-    // genuinely near-identical cluster survives 16 more sign agreements
-    // in one sub-bucket, so a sub-bucket still over cap IS homogeneous
-    // content and its min-id anchor stands for it (star pairs, O(n)).
-    // Under-cap sub-buckets self-join as usual. All still narrow +
-    // group-by — never a cross join, never a silent drop.
-    val refine = new RandomHyperplaneLsh(dim, 16, seed = seed + 7777)
-    val refineBucket = org.apache.spark.sql.GraftSqlShim.column(HyperplaneBuckets(
-      org.apache.spark.sql.GraftSqlShim.expression(col("embedding")),
-      Array(refine.hyperplanes.map(_.toArray).toArray)))
-    val banded = e.select(col("vec_id"),
-      element_at(refineBucket, 1).as("sub"),
-      posexplode(bucketArr).as(Seq("tbl", "bucket")))
-    // Cap gates ride the OVER-cap bucket list — tiny by construction
-    // (≤ |banded|/cap buckets), so it broadcasts and the banded frame
-    // never takes an extra exchange to be split into safe/hot (the
-    // under-cap-list join shuffled every banded row; same rewrite as
-    // minhashCandidatePairs' guard).
-    val sized = banded.groupBy("tbl", "bucket").agg(count(lit(1)).as("count"))
-    val overCap = sized.where(col("count") > bucketCap)
-      .select("tbl", "bucket").persistT // two consumers (anti + inner)
-    // Guarded hints on both cap gates: broadcast only while the list is
-    // actually small; pathological inputs degrade to a shuffle join
-    // instead of a failed broadcast (ADVICE r6 #4).
-    val overCapB = graft.ops.Hints.guardedBroadcast(overCap)
-    val safe = banded.join(overCapB, Seq("tbl", "bucket"), "left_anti")
-    val within = safe.select(col("tbl"), col("bucket"), col("vec_id").as("vec_a"))
-      .join(safe.select(col("tbl"), col("bucket"), col("vec_id").as("vec_b")), Seq("tbl", "bucket"))
-      .where(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b")
-    val hot = banded.join(overCapB, Seq("tbl", "bucket"))
-    val sized2 = hot.groupBy("tbl", "bucket", "sub")
-      .agg(count(lit(1)).as("count"), min("vec_id").as("anchor"))
-    val overCap2 = sized2.where(col("count") > bucketCap)
-      .select("tbl", "bucket", "sub", "anchor").persistT
-    val overCap2B = graft.ops.Hints.guardedBroadcast(overCap2)
-    val safe2 = hot.join(overCap2B.select("tbl", "bucket", "sub"),
-      Seq("tbl", "bucket", "sub"), "left_anti")
-    val within2 = safe2.select(col("tbl"), col("bucket"), col("sub"), col("vec_id").as("vec_a"))
-      .join(safe2.select(col("tbl"), col("bucket"), col("sub"), col("vec_id").as("vec_b")),
-        Seq("tbl", "bucket", "sub"))
-      .where(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b")
-    val stars = hot.join(overCap2B, Seq("tbl", "bucket", "sub"))
-      .where(col("vec_id") =!= col("anchor"))
-      .select(col("anchor").as("vec_a"), col("vec_id").as("vec_b"))
-    val pairs = within.unionByName(within2).unionByName(stars).distinct()
-    pairs
-      .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), Seq("vec_a"))
-      .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"), cosine(col("ea"), col("eb")).as("cos"))
-      // NaN compares GREATER than any number in Spark, so `>= minCos`
-      // alone would PASS a NaN cosine (zero/NaN vector pairs) — the
-      // adversarial sweep measured 600 NaN pairs leaking through
-      .where(!isnan(col("cos")) && col("cos") >= minCos)
+    import embs.sparkSession.implicits._
+    def bucketsOf(lshs: Seq[RandomHyperplaneLsh]): Column =
+      org.apache.spark.sql.GraftSqlShim.column(HyperplaneBuckets(
+        org.apache.spark.sql.GraftSqlShim.expression(col("embedding")),
+        lshs.map(_.hyperplanes.map(_.toArray).toArray).toArray))
+    val bucketArr = bucketsOf((0 until tables).map(t =>
+      new RandomHyperplaneLsh(dim, planesPerTable, seed = seed + t)))
+    val sub = element_at(bucketsOf(Seq(new RandomHyperplaneLsh(dim, 16, seed = seed + 7777))), 1)
+    // the typed decode below rejects a null element (and walks a
+    // nullable-element array one boxed element at a time); every other
+    // consumer of the vector reads a null element as 0, so this does too
+    val payload = embs.schema("embedding").dataType match {
+      case ArrayType(_, true) => transform(col("embedding"), x => coalesce(x, lit(0f)))
+      case _ => col("embedding")
+    }
+    // per-vector work in its own projection, below the explode, so it
+    // runs once per vector rather than once per table; the outer explode
+    // plus a null-bucket filter drops the vectors without buckets where
+    // a plain explode's inferred filter would compute the buckets twice
+    embs.where(col("vec_id").isNotNull)
+      .select(bucketArr.as("buckets"), sub.as("sub"), col("vec_id"), payload.as("embedding"))
+      .select(posexplode_outer(col("buckets")).as(Seq("tbl", "bucket")), col("sub"),
+        col("vec_id"), col("embedding"))
+      .where(col("bucket").isNotNull)
+      .repartition(col("tbl"), col("bucket"))
+      .sortWithinPartitions("tbl", "bucket", "sub", "vec_id")
+      .as[(Int, Int, Int, Long, Array[Float])]
+      .mapPartitions(it => new CosinePairStream(it, minCos, bucketCap))
+      .toDF("vec_a", "vec_b", "cos")
+      .dropDuplicates("vec_a", "vec_b")
   }
 }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sim.VectorFunctions
+import graft.sim.{CosineSimilarity, VectorFunctions}
 
 /** The native codegen cosine expression: SQL registration via
   * GraftExtensions, parity with the higher-order-function formulation,
@@ -55,6 +55,34 @@ class CosineExpressionSpec extends SparkSpec {
       VectorFunctions.cosine(col("ea"), col("eb")).as("native"), hof.as("hof")).collect()
     out.length should be > 0
     out.foreach(r => r.getDouble(0) shouldBe r.getDouble(1)) // exact, not approx
+  }
+
+  test("CosineSimilarity.of is bit-equal to the codegen expression on random, " +
+      "zero, NaN and unequal-length vectors") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(11)
+    def vec(n: Int): Seq[Float] = Seq.fill(n)(rnd.nextGaussian().toFloat)
+    val pairs: Seq[(Seq[Float], Seq[Float])] =
+      Seq.fill(200)((vec(64), vec(64))) ++ Seq(
+        (Seq.fill(8)(0f), vec(8)), (Seq.fill(8)(0f), Seq.fill(8)(0f)),
+        (Float.NaN +: vec(7), vec(8)), (vec(3) :+ Float.NaN, vec(4) :+ Float.NaN),
+        (vec(5), vec(9)), (vec(9), vec(5)), (Seq.empty[Float], vec(4)))
+    val schema = StructType(Seq(StructField("a", ArrayType(FloatType, false)),
+      StructField("b", ArrayType(FloatType, false))))
+    // an RDD-backed frame: a local relation would be folded on the
+    // driver by the interpreted eval, never reaching generated code
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }, 2), schema)
+      .select(VectorFunctions.cosine(col("a"), col("b")).as("c"))
+    df.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    } should not be empty
+    val viaCodegen = df.collect().map(_.getDouble(0))
+    val viaOf = pairs.map { case (a, b) => CosineSimilarity.of(a.toArray, b.toArray) }
+    viaCodegen.map(java.lang.Double.doubleToLongBits).toSeq shouldBe
+      viaOf.map(java.lang.Double.doubleToLongBits)
+    viaOf.count(_.isNaN) shouldBe 5 // zero and NaN vectors, the empty one
   }
 
   test("null input yields null, not an exception") {

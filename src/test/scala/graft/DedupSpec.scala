@@ -10,25 +10,6 @@ class DedupSpec extends SparkSpec {
   private def docsDF(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
-  /** Spark jobs `body` starts, counted by job group. */
-  private def jobsOf(label: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"$label-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, label)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.GraftSparkShim.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("exactGroups: one group per distinct text, min id survives") {
     val df = docsDF(1L -> "hello world", 2L -> "hello world", 3L -> "other")
     val out = Dedup.exactGroups(df).orderBy("keep_id").collect()

@@ -29,4 +29,23 @@ trait SparkSpec extends AnyFunSuite with Matchers {
   // stable identifier so suites can `import spark.implicits._`
   final lazy val spark: SparkSession = SparkSpec.spark
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts, counted by job group. */
+  def jobsOf(label: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

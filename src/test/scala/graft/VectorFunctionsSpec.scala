@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.sim.{RandomHyperplaneLsh, VectorFunctions}
+import graft.sim.{HyperplaneBuckets, RandomHyperplaneLsh, VectorFunctions}
 
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -129,6 +131,155 @@ class VectorFunctionsSpec extends SparkSpec {
     // no dirty-vector pair leaks (zero-zero / NaN cosines)
     out.map(_.getDouble(2)).foreach(c => assert(!c.isNaN))
     pairs.foreach { case (a, b) => assert(a < 100L && b < 100L) }
+  }
+
+  /** The census-and-join formulation `cosineNearDupPairs` replaced,
+    * kept as its equality reference: a (tbl, bucket) census, an
+    * over-cap gate, the under-cap self-join, a (tbl, bucket, sub)
+    * census of the over-cap buckets, the under-cap sub-bucket self-join,
+    * star pairs to each over-cap sub-bucket's min id, union + distinct,
+    * and two joins back to the embeddings for the exact cosine. */
+  private def referencePairs(embs: DataFrame, dim: Int, minCos: Double,
+                             tables: Int, planesPerTable: Int,
+                             bucketCap: Int, seed: Long = 42L): DataFrame = {
+    val (bucketArr, refineBucket) = bucketColumns(dim, tables, planesPerTable, seed)
+    val banded = embs.select(col("vec_id"),
+      element_at(refineBucket, 1).as("sub"),
+      posexplode(bucketArr).as(Seq("tbl", "bucket")))
+    val overCap = banded.groupBy("tbl", "bucket").agg(count(lit(1)).as("count"))
+      .where(col("count") > bucketCap).select("tbl", "bucket")
+    val safe = banded.join(overCap, Seq("tbl", "bucket"), "left_anti")
+    val within = safe.select(col("tbl"), col("bucket"), col("vec_id").as("vec_a"))
+      .join(safe.select(col("tbl"), col("bucket"), col("vec_id").as("vec_b")), Seq("tbl", "bucket"))
+      .where(col("vec_a") < col("vec_b"))
+      .select("vec_a", "vec_b")
+    val hot = banded.join(overCap, Seq("tbl", "bucket"))
+    val overCap2 = hot.groupBy("tbl", "bucket", "sub")
+      .agg(count(lit(1)).as("count"), min("vec_id").as("anchor"))
+      .where(col("count") > bucketCap).select("tbl", "bucket", "sub", "anchor")
+    val safe2 = hot.join(overCap2.select("tbl", "bucket", "sub"),
+      Seq("tbl", "bucket", "sub"), "left_anti")
+    val within2 = safe2.select(col("tbl"), col("bucket"), col("sub"), col("vec_id").as("vec_a"))
+      .join(safe2.select(col("tbl"), col("bucket"), col("sub"), col("vec_id").as("vec_b")),
+        Seq("tbl", "bucket", "sub"))
+      .where(col("vec_a") < col("vec_b"))
+      .select("vec_a", "vec_b")
+    val stars = hot.join(overCap2, Seq("tbl", "bucket", "sub"))
+      .where(col("vec_id") =!= col("anchor"))
+      .select(col("anchor").as("vec_a"), col("vec_id").as("vec_b"))
+    within.unionByName(within2).unionByName(stars).distinct()
+      .join(embs.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), Seq("vec_a"))
+      .join(embs.select(col("vec_id").as("vec_b"), col("embedding").as("eb")), Seq("vec_b"))
+      .select(col("vec_a"), col("vec_b"), VectorFunctions.cosine(col("ea"), col("eb")).as("cos"))
+      .where(!isnan(col("cos")) && col("cos") >= minCos)
+  }
+
+  /** The LSH bucket array and the 16-plane refinement bucket array, as
+    * `cosineNearDupPairs` computes them. */
+  private def bucketColumns(dim: Int, tables: Int, planesPerTable: Int,
+                            seed: Long): (Column, Column) = {
+    def of(lshs: Seq[RandomHyperplaneLsh]): Column =
+      org.apache.spark.sql.GraftSqlShim.column(HyperplaneBuckets(
+        org.apache.spark.sql.GraftSqlShim.expression(col("embedding")),
+        lshs.map(_.hyperplanes.map(_.toArray).toArray).toArray))
+    (of((0 until tables).map(t => new RandomHyperplaneLsh(dim, planesPerTable, seed = seed + t))),
+      of(Seq(new RandomHyperplaneLsh(dim, 16, seed = seed + 7777))))
+  }
+
+  private val dirtySchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = true),
+    StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true)))
+
+  // a base whose every ±1 projection is ≥ 0.02 in magnitude, so 1e-6
+  // perturbations never flip a sign: the cluster shares every bucket
+  // and every refinement sub-bucket
+  private val hotBase = Seq(0.83f, -0.41f, 0.67f, 0.29f, -0.74f, 0.56f, 0.18f, -0.92f)
+
+  /** 60 random 8-dim vectors, a near-duplicate partner (cos ≈ 0.99) for
+    * each of the first 20, a 12-vector near-identical cluster, and the
+    * dirty rows: null `vec_id`, null / zero / NaN / wrong-dimension
+    * vectors and a vector with a null element. */
+  private def equalityCorpus(): DataFrame = {
+    val rnd = new scala.util.Random(7)
+    val base = (0L until 60L).map(i => i -> Seq.fill(8)(rnd.nextGaussian().toFloat))
+    val partners = base.take(20).map { case (i, v) =>
+      (100L + i) -> v.map(x => x + 0.1f * rnd.nextGaussian().toFloat) }
+    val cluster = (200L until 212L).map(i =>
+      i -> Seq.tabulate(8)(d => hotBase(d) + (if (d == (i % 8).toInt) (i - 199) * 1e-6f else 0f)))
+    val clean = (base ++ partners ++ cluster).map { case (i, v) => Row(i, v) }
+    val dirty = Seq(
+      Row(null, base.head._2),                  // null id: a copy of vector 0
+      Row(null, hotBase),                       // null id: a cluster copy
+      Row(300L, null),                          // null vector
+      Row(301L, Seq.fill(8)(0f)),               // zero vectors
+      Row(302L, Seq.fill(8)(0f)),
+      Row(303L, Float.NaN +: Seq.fill(7)(1f)),  // NaN vector
+      Row(304L, Seq.fill(7)(1f)),               // wrong dimension, short
+      Row(305L, Seq.fill(9)(1f)),               // wrong dimension, long
+      Row(306L, null +: base(1)._2.tail))       // null element: reads as 0
+    spark.createDataFrame(spark.sparkContext.parallelize(clean ++ dirty, 3), dirtySchema)
+  }
+
+  private def pairRows(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted
+
+  test("cosineNearDupPairs equals the census-and-join reference row for row " +
+      "(bit-equal cos) through every cap path and on dirty rows") {
+    val corpus = equalityCorpus().cache()
+    try {
+      // (planesPerTable, bucketCap): 4 coarse buckets per table, all over
+      // cap 6, split into sub-runs; 256 fine buckets, cap 3 — singletons,
+      // under-cap buckets and the cluster's over-cap sub-bucket
+      for ((planes, cap) <- Seq((2, 6), (8, 3)); minCos <- Seq(0.0, 0.9)) {
+        val got = pairRows(VectorFunctions.cosineNearDupPairs(corpus, dim = 8,
+          minCos = minCos, planesPerTable = planes, bucketCap = cap))
+        // the reference's census counted null-id rows toward the cap;
+        // the kernel drops them first (the next test pins that case), so
+        // the reference sees the non-null ids
+        val want = pairRows(referencePairs(corpus.where(col("vec_id").isNotNull), dim = 8,
+          minCos = minCos, tables = 8, planesPerTable = planes, bucketCap = cap))
+        withClue(s"planes=$planes cap=$cap minCos=$minCos: ") {
+          got.size should be > 0
+          got shouldBe want
+        }
+      }
+      // every path fires: count bucket and sub-bucket sizes per config
+      val paths = Seq((2, 6), (8, 3)).map { case (planes, cap) =>
+        val (bucketArr, refine) = bucketColumns(8, 8, planes, 42L)
+        val banded = corpus.where(col("vec_id").isNotNull)
+          .select(element_at(refine, 1).as("sub"), posexplode(bucketArr).as(Seq("tbl", "bucket")))
+        val buckets = banded.groupBy("tbl", "bucket").count()
+        val subs = banded.join(buckets.where(col("count") > cap), Seq("tbl", "bucket"))
+          .groupBy("tbl", "bucket", "sub").agg(count(lit(1)).as("n"))
+        def n(df: DataFrame, c: Column): Long = df.where(c).count()
+        Seq(n(buckets, col("count") === 1), n(buckets, col("count").between(2, cap)),
+          n(buckets, col("count") > cap), n(subs, col("n").between(2, cap)), n(subs, col("n") > cap))
+      }.transpose.map(_.sum)
+      withClue("singleton, under-cap, over-cap buckets; under-cap, over-cap sub-runs: ") {
+        all(paths) should be > 0L
+      }
+    } finally corpus.unpersist()
+  }
+
+  test("cosineNearDupPairs: a null vec_id is dropped before the cap counts members") {
+    // four identical vectors and a null-id copy, cap 4: the null row is
+    // not a member, so the bucket is under cap and emits all six pairs
+    // (a census counting it made the bucket over cap: three star pairs)
+    val rows = (1L to 4L).map(i => Row(i, hotBase)) :+ Row(null, hotBase)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), dirtySchema)
+    val out = VectorFunctions.cosineNearDupPairs(df, dim = 8, minCos = 0.9, bucketCap = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    out shouldBe (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)).toSet
+  }
+
+  test("cosineNearDupPairs: one call plus collect runs 3 Spark jobs") {
+    val corpus = vecsDF(
+      0L -> Seq(1f, 2f, 3f, 4f), 1L -> Seq(1f, 2f, 3f, 4f),
+      2L -> Seq(2f, 4f, 6f, 8f), 3L -> Seq(-4f, 3f, -2f, 1f))
+    jobsOf("cosine-jobs") {
+      VectorFunctions.cosineNearDupPairs(corpus, dim = 4, minCos = 0.95).collect()
+    } shouldBe 3
   }
 
   test("IvfIndex.decontaminate: cell-blocked flags, empty-cell recall bound, NaN immunity") {
