@@ -172,21 +172,23 @@ private[dedup] final class ProbePairStream(
 
 /** Streaming span-scrub OWNER pass over a (gram, doc_id)-sorted
   * partition iterator — the [[Dedup.spanScrub]] kernel shape: rows are
-  * (gram, doc_id, pos) hash-partitioned by gram and sorted within the
-  * partition, so each gram's occurrences arrive consecutively with the
-  * MINIMUM doc_id — the owner — first. Every occurrence held by a later
-  * doc emits its (doc_id, pos) window start; the owner's own rows
-  * (repeats included) never do, so a gram held by one doc emits
-  * nothing and no ≥ 2-docs census is needed. Memory is O(1), no cap. */
-private[graft] final class SpanOwnerStream(rows: Iterator[(String, Long, Int)])
-  extends SortedRunStream[(String, Long, Int), (Long, Int)](rows) {
+  * (gram, doc_id, pos) hash-partitioned by the 16-byte window digest
+  * and sorted within the partition, so each gram's occurrences arrive
+  * consecutively with the MINIMUM doc_id — the owner — first. Every
+  * occurrence held by a later doc emits its (doc_id, pos) window start;
+  * the owner's own rows (repeats included) never do, so a gram held by
+  * one doc emits nothing and no ≥ 2-docs census is needed. Runs are
+  * compared on every digest byte. Memory is O(1), no cap. */
+private[graft] final class SpanOwnerStream(rows: Iterator[(Array[Byte], Long, Int)])
+  extends SortedRunStream[(Array[Byte], Long, Int), (Long, Int)](rows) {
 
-  private var gram: String = null
+  private var gram: Array[Byte] = null
   private var owner = 0L
 
-  protected def sameRun(r: (String, Long, Int)): Boolean = r._1 == gram
-  protected def begin(r: (String, Long, Int)): Unit = { gram = r._1; owner = r._2 }
-  protected def add(r: (String, Long, Int)): Unit =
+  protected def sameRun(r: (Array[Byte], Long, Int)): Boolean =
+    java.util.Arrays.equals(r._1, gram)
+  protected def begin(r: (Array[Byte], Long, Int)): Unit = { gram = r._1; owner = r._2 }
+  protected def add(r: (Array[Byte], Long, Int)): Unit =
     if (r._2 != owner) out.append((r._2, r._3))
   protected def end(): Unit = ()
 }

@@ -714,12 +714,13 @@ object Dedup {
     * kept tokens — the full rewrite semantics hashed without shipping
     * the scrubbed text anywhere.
     *
-    * Scale shape: the tokenize + L-window md5 projection stays in the
+    * Scale shape: the tokenize + L-window digest projection (native
+    * one-pass kernels, [[TextFunctions.windowDigests]]) stays in the
     * scan stage; the (gram, doc_id, pos) rows then ride ONE hash
-    * exchange on gram, sorted within the partition by (gram, doc_id),
-    * and [[SpanOwnerStream]] emits every non-owner window start in one
-    * pass (O(1) memory, no cap; a gram held by one doc emits nothing,
-    * so no ≥ 2-docs census is needed). The starts — a few ints per
+    * exchange on the 16-byte binary gram, sorted within the partition
+    * by (gram, doc_id), and [[SpanOwnerStream]] emits every non-owner
+    * window start in one pass (O(1) memory, no cap; a gram held by one
+    * doc emits nothing, so no ≥ 2-docs census is needed). The starts — a few ints per
     * AFFECTED doc — fold into one doc-keyed collect_list, inner-join
     * the tokenized docs and rewrite each doc in one row
     * ([[scrubRewrite]]): unscrubbed docs drop at the join, and the
@@ -732,8 +733,8 @@ object Dedup {
     require(minLen >= 2, s"minLen must be >= 2: $minLen")
     import docs.sparkSession.implicits._
     val L = minLen
-    // narrow-input guard (r16): the L-window md5 transform below is
-    // the expensive projection — spread a single-split scan core-wide.
+    // narrow-input guard (r16): the L-window digests below are the
+    // expensive projection — spread a single-split scan core-wide.
     // Only docs of ≥ L tokens can hold a window, and the doc_id guard
     // is the one the rewrite's inner join infers: with both filters
     // here, the window pass and the rewrite read the SAME subtree and
@@ -743,13 +744,12 @@ object Dedup {
         .where(size(col("ts")) >= L && col("doc_id").isNotNull),
       Seq(col("doc_id")))
     val starts = toked
-      .select(col("doc_id").cast("long").as("doc_id"), posexplode(transform(
-        sequence(lit(0), size(col("ts")) - L),
-        i => md5(array_join(slice(col("ts"), i + 1, lit(L)), " ")))))
+      .select(col("doc_id").cast("long").as("doc_id"),
+        posexplode(TextFunctions.windowDigests(col("ts"), lit(L))))
       .select(col("col").as("gram"), col("doc_id"), col("pos"))
       .repartition(col("gram"))
       .sortWithinPartitions(col("gram"), col("doc_id"))
-      .as[(String, Long, Int)]
+      .as[(Array[Byte], Long, Int)]
       .mapPartitions(it => new SpanOwnerStream(it))
       .toDF("doc_id", "pos")
     scrubRewrite(toked, starts, L)
@@ -828,9 +828,7 @@ object Dedup {
         docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts"))
           .where(size(col("ts")) >= L),
         Seq(col("doc_id")))
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), size(col("ts")) - L),
-        i => md5(array_join(slice(col("ts"), i + 1, lit(L)), " ")))))
+      .select(col("doc_id"), posexplode(TextFunctions.windowDigests(col("ts"), lit(L))))
       .toDF("doc_id", "pos", "gram")
     val corpusGrams = gramsOf(corpus).select(col("gram")).distinct()
     gramsOf(batch).join(corpusGrams, Seq("gram"), "left_semi")
@@ -854,11 +852,11 @@ object Dedup {
     * distributed equivalent used here is the sliding-window
     * characterization: a span of length ≥ L is duplicated iff EVERY one
     * of its L-token windows is duplicated, so (1) hash every L-window
-    * (a pure projection — `transform` over the token array, md5 of the
-    * space-joined slice, no shuffle), (2) census window hashes held by
-    * ≥ 2 distinct docs (ONE hash-partitioned aggregate — a boilerplate
-    * window shared by a billion docs is one census row, never a
-    * quadratic pair set), (3) merge each doc's consecutive duplicated
+    * (a pure projection — the 16-byte md5 of each space-joined window,
+    * [[TextFunctions.windowDigests]], no shuffle), (2) census window
+    * hashes held by ≥ 2 distinct docs (ONE hash-partitioned aggregate —
+    * a boilerplate window shared by a billion docs is one census row,
+    * never a quadratic pair set), (3) merge each doc's consecutive duplicated
     * window positions into maximal spans (gaps-and-islands over a
     * PER-DOC window — bounded by document length, never corpus-wide).
     * Only 16-byte window hashes ever shuffle; text stays in the scan
@@ -880,9 +878,7 @@ object Dedup {
         docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts"))
           .where(size(col("ts")) >= L),
         Seq(col("doc_id")))
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), size(col("ts")) - L),
-        i => md5(array_join(slice(col("ts"), i + 1, lit(L)), " ")))))
+      .select(col("doc_id"), posexplode(TextFunctions.windowDigests(col("ts"), lit(L))))
       .toDF("doc_id", "pos", "gram")
       .persistT
     val dup = grams.groupBy(col("gram"))
@@ -907,8 +903,9 @@ object Dedup {
     * window once PER length; here the lengths ride one pipeline tagged
     * by `min_len`:
     *   - tokenize once, explode the applicable lengths INSIDE the row
-    *     (no shuffle carries the token array), md5 every L-window of
-    *     every length in the same projection;
+    *     (no shuffle carries the token array), digest every L-window
+    *     of every length in the same projection (one
+    *     [[TextFunctions.windowDigests]] kernel with a per-row length);
     *   - ONE (min_len, gram) census, ONE join, ONE per-(min_len, doc)
     *     islands window.
     * Per length the gram set, the ≥2-distinct-docs census and the
@@ -926,9 +923,8 @@ object Dedup {
     val grams = toked
       .select(col("doc_id"), col("ts"),
         explode(filter(lens, l => size(col("ts")) >= l)).as("min_len"))
-      .select(col("min_len"), col("doc_id"), posexplode(transform(
-        sequence(lit(0), size(col("ts")) - col("min_len")),
-        i => md5(array_join(slice(col("ts"), i + 1, col("min_len")), " ")))))
+      .select(col("min_len"), col("doc_id"),
+        posexplode(TextFunctions.windowDigests(col("ts"), col("min_len"))))
       .toDF("min_len", "doc_id", "pos", "gram")
       .persistT
     val dup = grams.groupBy(col("min_len"), col("gram"))

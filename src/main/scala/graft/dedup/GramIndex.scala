@@ -287,6 +287,8 @@ object GramIndex {
         docs.select(col("doc_id"), src.as("source"),
             TextFunctions.tokens(col("text")).as("ts"))
           .where(size(col("ts")) >= L))
+      // hex keys, not the binary TextFunctions.windowDigests: `gram` is
+      // persisted in bucketed index tables, so changing it is a format migration
       .select(col("doc_id"), col("source"), posexplode(transform(
         sequence(lit(0), size(col("ts")) - L),
         i => md5(array_join(slice(col("ts"), i + 1, lit(L)), " ")))))

@@ -514,6 +514,7 @@ object TextIngestQueries {
           .select(col("doc_id"), graft.text.TextFunctions.tokens(col("text")).as("ts"))
           .where(size(col("ts")) >= L))
       .select(col("doc_id"), posexplode(expr(
+        // hex gram, as GramIndex persists it; the key never leaves this query
         s"transform(sequence(0, size(ts) - $L), i -> md5(array_join(slice(ts, i + 1, $L), ' ')))")))
       .toDF("doc_id", "pos", "gram")
     val docs = docs0(s, d)
@@ -613,6 +614,7 @@ object TextIngestQueries {
         .select(col("source"), graft.text.TextFunctions.tokens(col("text")).as("ts"))
         .where(size(col("ts")) >= L)) // r16 spread: see q289 gramsOf
       .select(col("source"), explode(expr(
+        // hex gram, as GramIndex persists it; the key never leaves this query
         s"transform(sequence(0, size(ts) - $L), i -> md5(array_join(slice(ts, i + 1, $L), ' ')))"))
         .as("gram"))
       .groupBy(col("gram"), col("source"))
@@ -833,6 +835,7 @@ object TextIngestQueries {
       .select(col("source"), graft.text.TextFunctions.tokens(col("text")).as("ts"))
       .where(size(col("ts")) >= L)
       .select(col("source"), explode(expr(
+        // hex gram: joined to GramIndex's persisted hex keys; binary is a format migration
         s"transform(sequence(0, size(ts) - $L), i -> md5(array_join(slice(ts, i + 1, $L), ' ')))"))
         .as("gram"))
       .groupBy(col("gram"), col("source"))

@@ -188,8 +188,11 @@ object Sources {
     * Returns a small audit MANIFEST (one row per partition value:
     * file count + row count, read from the committed output, not from
     * the input — it proves what actually landed). Production runs
-    * persist it next to the dataset; at any scale it is one
-    * footer-level aggregation over the output listing.
+    * persist it next to the dataset. It is a lazy plan that, when run,
+    * scans every written row again, tags each with `input_file_name()`
+    * and aggregates `countDistinct(_file)` and `count` per partition
+    * value — a full read of the output plus a shuffle, not a
+    * footer-only aggregation.
     */
   def writeCorpus(df: DataFrame, path: String, partitionCols: Seq[String],
                   sortCols: Seq[String], maxRecordsPerFile: Long = 1000000L,

@@ -1,23 +1,44 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlShim}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 /** Column-level text-analysis building blocks for the LLM-data-pipeline
   * extension (driver mandate; SURVEY.md §2.11).
   *
-  * Everything here is built from codegen-friendly built-in functions
-  * (split / regexp / higher-order array functions) — no opaque UDFs —
-  * so Catalyst can push projections below them and whole-stage codegen
-  * keeps the hot path tight at 100 TB.
+  * The per-document hot path — the tokenizer, the token / BPE /
+  * character counters, the word-list hit count and the span-dedup
+  * window keys — is native Catalyst expressions ([[TextKernels]]): one
+  * pass over the string or array inside whole-stage codegen, no regex
+  * scan, no interpreted lambda, no intermediate array taken only for
+  * its size. Each returns exactly what the built-in formula it replaced
+  * returned (TextKernelsSpec pins each against that formula). The rest
+  * is built-in functions, so Catalyst can push projections below them.
+  *
+  * Dirty-text contract (literal values, pinned in TextFunctionsSpec):
+  *   - `null`: [[tokenCount]], [[bpeTokenCount]] and [[nonSpaceChars]]
+  *     are null; [[langId]] is "de";
+  *   - `""`: [[tokens]] is `[""]`, [[tokenCount]] 1;
+  *   - `"\nHello World"`: `["", "hello", "world"]`, count 3 (`trim`
+  *     strips only spaces, and a leading whitespace run yields "");
+  *   - `"a b\n"`: a trailing "", count 3;
+  *   - `"x\u00A0y"` (NBSP is not `\s`): one token, BPE count 3;
+  *   - `"İSTANBUL Σ straße"`: `["i̇stanbul", "σ", "straße"]`, BPE count 7;
+  *   - `"🙂 ok"`: BPE count 2, [[nonSpaceChars]] 3;
+  *   - input that is not valid UTF-8: the values of the regex formulas.
   */
 object TextFunctions {
 
-  /** Lowercased whitespace tokens. */
-  def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
+  private def native(e: Expression): Column = GraftSqlShim.column(e)
+  private def catalyst(c: Column): Expression = GraftSqlShim.expression(c)
 
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** Lowercased whitespace tokens: `split(lower(trim(text)), "\\s+")`. */
+  def tokens(text: Column): Column = native(Tokens(catalyst(lower(trim(text)))))
+
+  /** `size(tokens(text))`, without building the array. */
+  def tokenCount(text: Column): Column = native(TokenCount(catalyst(trim(text))))
 
   /** BPE-style pretokenization (letter runs | digit runs | single
     * non-space symbol) over lowercased text — the units a byte-pair
@@ -30,18 +51,27 @@ object TextFunctions {
   def bpeTokens(text: Column): Column =
     regexp_extract_all(lower(text), lit(BpePattern), lit(0))
 
-  def bpeTokenCount(text: Column): Column = size(bpeTokens(text))
+  /** `size(bpeTokens(text))`, without building the array. */
+  def bpeTokenCount(text: Column): Column = native(BpeTokenCount(catalyst(lower(text))))
 
   /** English-ish function words used by the quality score. */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
 
-  /** How many tokens fall in `words`. */
+  /** How many tokens fall in `words` (`size(filter(toks, t -> t IN
+    * words))`): null for a null array; a null token never counts. */
   def hitCount(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isInCollection(words)))
+    native(HitCount(catalyst(toks), words))
 
-  /** Character count excluding whitespace. */
-  def nonSpaceChars(text: Column): Column =
-    length(regexp_replace(text, "\\s", ""))
+  /** Character count excluding whitespace:
+    * `length(regexp_replace(text, "\\s", ""))`. */
+  def nonSpaceChars(text: Column): Column = native(NonSpaceChars(catalyst(text)))
+
+  /** The 16-byte md5 of every `len`-token window of `ts`, in window
+    * order (`unhex(md5(array_join(slice(ts, i + 1, len), " ")))` for
+    * every start i; none when `ts` is shorter than `len`) — the
+    * span-dedup window key. `len` may vary per row. */
+  def windowDigests(ts: Column, len: Column): Column =
+    native(WindowDigests(catalyst(ts), catalyst(len)))
 
   /** Fixed-size token blocks (`blockLen` tokens each, last block
     * ragged), as space-joined strings. Assumes ≥1 token (the callers'
@@ -84,7 +114,9 @@ object TextFunctions {
     "es" -> Seq("data", "row", "table"),
     "de" -> Seq("join", "merge", "hash"))
 
-  /** Argmax over marker-hit counts, ties resolved in LangMarkers order. */
+  /** Argmax over marker-hit counts, ties resolved in LangMarkers order.
+    * A null token array has null counts, so every comparison is null
+    * and the chain falls through to "de". */
   def langId(toks: Column): Column = {
     val hits = LangMarkers.map { case (lang, words) => lang -> hitCount(toks, words) }
     val Seq(en, es, de) = hits.map(_._2)
@@ -123,6 +155,5 @@ object TextFunctions {
     * allocation per window and dominated the whole query set at sf0.1.
     */
   def winnowFingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      WinnowFingerprint(org.apache.spark.sql.GraftSqlShim.expression(text), k, w))
+    native(WinnowFingerprint(catalyst(text), k, w))
 }

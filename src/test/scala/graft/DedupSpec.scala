@@ -512,24 +512,41 @@ class DedupSpec extends SparkSpec {
     jobsOf("spanscrub-jobs") { Dedup.spanScrub(df, minLen = 8).collect() } shouldBe 5
   }
 
+  /** A 16-byte window key, as spanScrub ships it. A fresh array per
+    * call, so the stream must compare keys by content. */
+  private def key(g: String): Array[Byte] =
+    java.security.MessageDigest.getInstance("MD5").digest(g.getBytes("UTF-8"))
+
   test("SpanOwnerStream: empty input and single-holder grams emit nothing") {
     new graft.dedup.SpanOwnerStream(Iterator.empty).toList shouldBe Nil
     // one doc holding the gram, even repeatedly, owns every occurrence
-    new graft.dedup.SpanOwnerStream(Iterator(("g", 5L, 0), ("g", 5L, 3), ("g", 5L, 9)))
-      .toList shouldBe Nil
+    new graft.dedup.SpanOwnerStream(Iterator((key("g"), 5L, 0), (key("g"), 5L, 3),
+      (key("g"), 5L, 9))).toList shouldBe Nil
   }
 
   test("SpanOwnerStream: owner repeats stay, every non-owner occurrence emits its start") {
-    val rows = Iterator(("g", 1L, 0), ("g", 1L, 4), ("g", 2L, 0), ("g", 2L, 7), ("g", 3L, 2))
+    val rows = Iterator((key("g"), 1L, 0), (key("g"), 1L, 4), (key("g"), 2L, 0),
+      (key("g"), 2L, 7), (key("g"), 3L, 2))
     new graft.dedup.SpanOwnerStream(rows).toList shouldBe List((2L, 0), (2L, 7), (3L, 2))
   }
 
   test("SpanOwnerStream: the owner resets between consecutive grams") {
     // b's owner is 2 (not a's 1); c is held by 3 alone
-    val rows = Iterator(("a", 1L, 0), ("a", 2L, 1), ("b", 2L, 5), ("b", 3L, 6), ("c", 3L, 0))
+    val rows = Iterator((key("a"), 1L, 0), (key("a"), 2L, 1), (key("b"), 2L, 5),
+      (key("b"), 3L, 6), (key("c"), 3L, 0))
     val it = new graft.dedup.SpanOwnerStream(rows)
     it.toList shouldBe List((2L, 1), (3L, 6))
     it.hasNext shouldBe false
+  }
+
+  test("SpanOwnerStream: keys that differ only in the last byte are different grams") {
+    // two digests sharing a 15-byte prefix: doc 2 owns the second gram,
+    // so it emits nothing; a prefix compare would make doc 1 its owner
+    val a = key("a")
+    val b = a.clone()
+    b(15) = (b(15) ^ 1).toByte
+    val rows = Iterator((a, 1L, 0), (b, 2L, 3), (b, 3L, 4))
+    new graft.dedup.SpanOwnerStream(rows).toList shouldBe List((3L, 4))
   }
 
   test("rewriteDoc: overlapping and unsorted window starts remove their union once") {

@@ -81,6 +81,42 @@ class TextFunctionsSpec extends SparkSpec {
     out shouldBe Array("en", "es", "de", "en")
   }
 
+  test("dirty-text contract: literal tokens and counts for null, empty, edge whitespace, " +
+      "NBSP, case folding and supplementary code points") {
+    val text = col("text")
+    val out = Seq[Option[String]](None, Some(""), Some("\nHello World"), Some("a b\n"),
+        Some("x\u00A0y"), Some("\u0130STANBUL \u03A3 stra\u00DFe"), Some("\uD83D\uDE42 ok"))
+      .toDF("text")
+      .select(TextFunctions.tokens(text), TextFunctions.tokenCount(text),
+        TextFunctions.bpeTokenCount(text), TextFunctions.nonSpaceChars(text),
+        TextFunctions.langId(TextFunctions.tokens(text)))
+      .collect().map(r => (Option(r.getSeq[String](0)).map(_.toList),
+        Option(r.get(1)), Option(r.get(2)), Option(r.get(3)), r.getString(4)))
+    out.toSeq shouldBe Seq(
+      (None, None, None, None, "de"), // every count null; the when chain falls to "de"
+      (Some(List("")), Some(1), Some(0), Some(0), "en"),
+      (Some(List("", "hello", "world")), Some(3), Some(2), Some(10), "en"), // trim strips spaces only
+      (Some(List("a", "b", "")), Some(3), Some(2), Some(2), "en"),
+      (Some(List("x\u00A0y")), Some(1), Some(3), Some(3), "en"), // NBSP is not \s
+      (Some(List("i\u0307stanbul", "\u03C3", "stra\u00DFe")), Some(3), Some(7), Some(15), "en"),
+      (Some(List("\uD83D\uDE42", "ok")), Some(2), Some(2), Some(3), "en"))
+  }
+
+  test("dirty-text contract: invalid UTF-8 (a binary cast) keeps the regex formulas' values") {
+    val text = col("b").cast("string")
+    val df = Seq(Tuple1(Array(0xC3, 0x20, 0x41, 0xED, 0xA0, 0x80, 0xFF, 0x0A, 0x62).map(_.toByte)))
+      .toDF("b")
+    val got = df.select(TextFunctions.tokens(text), TextFunctions.tokenCount(text),
+      TextFunctions.bpeTokenCount(text), TextFunctions.nonSpaceChars(text)).collect()(0).toSeq
+    val want = df.select(split(lower(trim(text)), "\\s+"),
+      org.apache.spark.sql.functions.size(split(lower(trim(text)), "\\s+")),
+      org.apache.spark.sql.functions.size(
+        regexp_extract_all(lower(text), lit(TextFunctions.BpePattern), lit(0))),
+      org.apache.spark.sql.functions.length(regexp_replace(text, "\\s", "")))
+      .collect()(0).toSeq
+    got shouldBe want
+  }
+
   test("winnowFingerprints: deterministic, non-empty, shared grams overlap") {
     val df = Seq("abcdefghijklmnop", "abcdefghijklmnop", "zzzzyyyyxxxxwwww").toDF("text")
     val fps = df.select(TextFunctions.winnowFingerprints(col("text")).as("fp"))
