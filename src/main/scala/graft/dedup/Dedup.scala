@@ -602,7 +602,7 @@ object Dedup {
   /** Diagnostic only: rounds the last [[nearDupClusters]] distributed
     * label-propagation run took to reach its fixpoint (-1 = the gated
     * driver union-find path ran instead). Written single-threadedly by
-    * the driver; the adversarial sweep asserts the pointer-jumping
+    * the driver; AdversarialSpec asserts the pointer-jumping
     * O(log diameter) bound against it. */
   @volatile private[graft] var lastLabelPropIterations: Int = -1
 

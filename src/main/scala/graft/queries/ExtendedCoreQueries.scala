@@ -1846,7 +1846,7 @@ object ExtendedCoreQueries {
     * whitens its own baseline — though an outlier ALREADY INSIDE the
     * trailing window inflates σ and can mask the next few points:
     * baseline contamination is the documented trade of trailing-window
-    * scoring, pinned by AdvSweep wave 8's contaminated-dip case; the
+    * scoring; the
     * robust alternative at scale is a median/MAD window, which has no
     * integer-exact form). The z-score test `|x−μ| > 3σ` is kept
     * INTEGER end-to-end by clearing denominators: with n, S=Σxᵢ,
@@ -2419,9 +2419,9 @@ object ExtendedCoreQueries {
     sessionCoOccurrence(Tables.events(s, d))
 
   /** q120's kernel on any events frame with (user_id, ts, event_id,
-    * event_type) — public so the adversarial sweep can drive it with a
-    * power-user corpus (one user, 10⁵ events) that the fixture's
-    * uniform events never produce. */
+    * event_type) — public so AdversarialSpec can drive it with a
+    * power-user corpus (a mega-session, back-to-back long sessions) that
+    * the fixture's uniform events never produce. */
   def sessionCoOccurrence(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))

@@ -1,13 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
-
 /** Aggregation point for the extended-coverage waves. The former
   * 6,300-line single file is split by wave (VERDICT r11 #6) into
   * [[ExtendedCoreQueries]], [[ExtendedAnalyticsQueries]], and
   * [[ExtendedStatsQueries]]; this object keeps the registration
-  * contract (`defs`) and the public entry points stable for
-  * [[graft.SparkEntry]] and the adversarial sweep.
+  * contract (`defs`) stable for [[graft.SparkEntry]].
   */
 object ExtendedQueries {
   import ParityQueries.Q
@@ -15,9 +12,4 @@ object ExtendedQueries {
   val defs: Seq[(String, Q, Option[String])] =
     ExtendedCoreQueries.defs ++ ExtendedAnalyticsQueries.defs ++
       ExtendedStatsQueries.defs
-
-  /** Forwarder: the co-occurrence kernel the adversarial sweep drives
-    * directly (AdvSweep wave 9). */
-  def sessionCoOccurrence(events: DataFrame): DataFrame =
-    ExtendedCoreQueries.sessionCoOccurrence(events)
 }

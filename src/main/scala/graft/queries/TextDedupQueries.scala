@@ -2037,7 +2037,7 @@ object TextDedupQueries {
     * aggregate. At 100 TB the only O(corpus) stages are the two
     * hash-partitioned exchanges on `gh`.
     *
-    * Source-cardinality bound (AdvSweep `source_overlap_1000*`): the
+    * Source-cardinality bound: the
     * in-row expansion builds ONE C(|srcs|,2)-struct array per gram
     * row — quadratic PER ROW. Measured at |S|=1000 with 50 universal
     * grams: 50.2 s in-row vs 9.0 s for the equivalent self-join on

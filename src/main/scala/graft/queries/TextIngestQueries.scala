@@ -513,9 +513,8 @@ object TextIngestQueries {
       graft.ops.RelationalOps.spreadNarrowInput(df
           .select(col("doc_id"), graft.text.TextFunctions.tokens(col("text")).as("ts"))
           .where(size(col("ts")) >= L))
-      .select(col("doc_id"), posexplode(expr(
-        // hex gram, as GramIndex persists it; the key never leaves this query
-        s"transform(sequence(0, size(ts) - $L), i -> md5(array_join(slice(ts, i + 1, $L), ' ')))")))
+      // the 16-byte window digest: the key never leaves this query
+      .select(col("doc_id"), posexplode(graft.text.TextFunctions.windowDigests(col("ts"), lit(L))))
       .toDF("doc_id", "pos", "gram")
     val docs = docs0(s, d)
     val bg = gramsOf(docs.where(col("doc_id") % 10 === 0)).persistT
@@ -600,7 +599,8 @@ object TextIngestQueries {
     * (the q289 breadth-cap discipline at source grain; the count keeps
     * the cap honest — contamination never silently disappears). At the
     * fixture's breadth (max 4 sources/gram at both sf) the cap never
-    * binds; the many-sources fixture in AdvSweep exercises it. */
+    * binds; AdversarialSpec's 30-source wide-template case makes it
+    * bind. */
   private def q290(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val L = 8; val C = 16

@@ -165,7 +165,7 @@ class IvfIndex(val nCells: Int = 16, val nProbe: Int = 4) extends Serializable {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         VectorFunctions.cosine(col("q_emb"), col("embedding")).as("cos"))
       // NaN sorts above every real cosine — drop dirty-vector scores
-      // before ranking (no-op on valid corpora; adversarial-sweep pin)
+      // before ranking (no-op on valid corpora; AdversarialSpec pins it)
       .where(!isnan(col("cos")))
     // (query, neighbor) is unique by construction: the corpus side
     // carries exactly ONE cell per vector (assignWith keep=1), so a

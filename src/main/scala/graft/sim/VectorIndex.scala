@@ -175,8 +175,8 @@ object VectorIndex {
     fs.delete(new org.apache.hadoop.fs.Path(retractedDir(dir)), true)
     // the manual dir deletes above bypass the datasource writer, so the
     // session's shared FileStatusCache still lists the dead files — the
-    // NEXT topK in the same session would throw FILE_NOT_EXIST (found
-    // by AdvSweep's whole-cell-takedown case, wave 19). Writers that go
+    // NEXT topK in the same session would throw FILE_NOT_EXIST (pinned
+    // by RetractionSpec's whole-cell takedown). Writers that go
     // through the datasource invalidate this themselves; manual deletes
     // must do it explicitly.
     spark.catalog.refreshByPath(cellsDir(dir))

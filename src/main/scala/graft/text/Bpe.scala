@@ -387,8 +387,8 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)],
     val out = mutable.ArrayBuffer.empty[UTF8String]
     Bpe.pretokens(input.asInstanceOf[UTF8String].toString).foreach { w =>
       // adversarial-length guard: greedy merging is O(len²) per
-      // pretoken, so one megabyte garbage "word" (the AdvFixture
-      // monster-row shape) would stall its executor core for hours.
+      // pretoken, so one megabyte garbage "word" would stall its
+      // executor core for hours (BpeSpec's monster-pretoken case).
       // Over-long pretokens encode in maxWordLen-char pieces — still
       // lossless under concatenation, and real vocabulary never gets
       // near the cap (these pieces also bypass the memo: each is

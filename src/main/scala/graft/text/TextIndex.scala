@@ -332,7 +332,7 @@ object TextIndex {
     if (ret.nonEmpty) dropStale(spark, retractedName(name))
   }
 
-  /** Compaction POLICY hook, calibrated by the round-7 IndexBench run:
+  /** Compaction POLICY hook, calibrated by a standing-index probe run:
     * probe latency is append-fragmentation-dominated for this index
     * (every append adds posting files per touched bucket AND one more
     * stat-partial row set that every probe folds) and crosses the

@@ -671,10 +671,12 @@ class RetractionSpec extends SparkSpec {
     // manually (dynamic overwrite writes nothing for it) and must also
     // refresh the session's file-status cache — without that, the next
     // read in the same session throws FILE_NOT_EXIST on the dead
-    // listings (found by AdvSweep's wave-19 case, fixed in reclaim)
+    // listings (the fresh-listing read below pins the refresh)
     val cellsNow = spark.read.parquet(s"$tmp/a/cells")
     val victim = cellsNow.groupBy("cell").count().orderBy(col("count"), col("cell"))
       .select(col("cell").cast("int")).head().getInt(0)
+    // collected before reclaim: a frame over the old listing would read dead files
+    val victimIds = cellsNow.where(col("cell") === victim).select(col("vec_id")).as[Long].collect()
     PqVectorIndex.retract(spark, s"$tmp/a",
       cellsNow.where(col("cell") === victim).select("vec_id"))
     PqVectorIndex.reclaim(spark, s"$tmp/a")
@@ -682,5 +684,7 @@ class RetractionSpec extends SparkSpec {
     spark.read.parquet(s"$tmp/a/cells")
       .where(col("cell") === victim).count() shouldBe 0L // fresh listing, no throw
     rows(s"$tmp/a") should not be empty
+    PqVectorIndex.write(e.where(!col("vec_id").isin(victimIds: _*)), s"$tmp/ref_cell", ivf, cents, pq, cb)
+    rows(s"$tmp/a") shouldBe rows(s"$tmp/ref_cell")
   }
 }

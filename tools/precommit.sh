@@ -9,6 +9,10 @@
 #    per-session MV rewrite switch. Path choices (driver twin vs
 #    distributed loop) are constants in graft.ops.DriverTwin, never
 #    settings.
+#    Entry-point guard: a `def main(` in src/main is a driver or
+#    precommit surface (Bench, Verify, Smoke, Explain, LintNew,
+#    ScaleProbe) or it does not belong there — harness code lives in
+#    tests.
 # 1. `sbt compile` — the r10 failure mode (an uncompiled final commit)
 #    becomes impossible.
 # 2. If query names are given (anything touched since the last full
@@ -24,6 +28,13 @@ BAD_KEYS=$(git grep --untracked -ohE 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' 
 if [ -n "$BAD_KEYS" ]; then
   echo "PRECOMMIT FAIL: spark.graft.* keys outside the allowed two:"
   echo "$BAD_KEYS"
+  exit 1
+fi
+BAD_MAINS=$(git grep --untracked -lE 'def main\(' -- src/main \
+  | grep -vxE 'src/main/scala/graft/(Bench|Verify|Smoke|Explain|LintNew|ScaleProbe)\.scala' || true)
+if [ -n "$BAD_MAINS" ]; then
+  echo "PRECOMMIT FAIL: def main( outside the driver and precommit surfaces:"
+  echo "$BAD_MAINS"
   exit 1
 fi
 # Test/compile: main AND test sources must compile (ADVICE r11 — a
